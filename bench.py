@@ -14,7 +14,7 @@ this script (committed per round as the complete record).
 
 Env:
 - ``SPARK_GRAFT_SF_DIR``  (default /root/testdata/sf0.1)
-- ``SPARK_GRAFT_CPUS``    (default 32; forwarded to the session factory)
+- ``SPARK_GRAFT_CPUS``    (default: usable cores; forwarded to the session factory)
 
 Each query executes to completion through the ``noop`` sink (all
 operators run, nothing is collected to the driver), which is the
@@ -34,7 +34,10 @@ from world_vaccination_coverage_etl_spark.queries import REGISTRY  # noqa: E402
 from world_vaccination_coverage_etl_spark.queries._core import (  # noqa: E402
     POOLED_QUERIES,
 )
-from world_vaccination_coverage_etl_spark.session import get_spark  # noqa: E402
+from world_vaccination_coverage_etl_spark.session import (  # noqa: E402
+    default_cpus,
+    get_spark,
+)
 
 
 def main() -> int:
@@ -137,7 +140,7 @@ def main() -> int:
         # core count this run measured under (r13 verdict item 1: the
         # driver's c8 rerun overwrote the c32 full table; artifacts are
         # now named per core count, see local_path below)
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": default_cpus(),
         # full observations per query (r10 ADVICE: the best-of-2 min
         # of a POOLED query measures a pool hit, so the cold first
         # run is recorded separately and gated below).  The two

@@ -6,6 +6,7 @@ import math
 
 import pytest
 
+from world_vaccination_coverage_etl_spark.functions.stats import series_window_stats
 from world_vaccination_coverage_etl_spark.plans.analytics import (
     antigens_for_country,
     cached_dimension_index,
@@ -128,3 +129,60 @@ def test_window_compare_gates_small_n(fact):
     assert r.t_stat is None and r.p_value is None
     assert r.ci_lo_before is None  # n<2 -> NaN CI per reference semantics
     assert r.significance == "insufficient-data"
+
+
+# (start_year, pre_years, post_years): the usual block, short windows,
+# n = 1 on one side, an empty before window (pre = 0), windows before
+# and past the data (n = 0), and a wide window
+_PARITY_WINDOWS = [
+    (2017, 5, 5),
+    (2017, 3, 2),
+    (2011, 1, 1),
+    (2016, 1, 0),
+    (2013, 2, 2),
+    (2010, 0, 12),
+    (2005, 3, 3),
+    (2030, 5, 5),
+    (2020, 10, 2),
+]
+
+
+def test_series_window_stats_matches_window_compare(spark, fact):
+    """The in-process one-series block equals the grouped plan, field
+    for field, over every fixture series plus a series that is constant
+    up to 2016 (zero variance in one or both windows)."""
+    const = spark.createDataFrame(
+        [("Constland", "coverage__bcg", y, 88.1 if y < 2017 else 90.0 + 1.5 * (y - 2017))
+         for y in range(2010, 2021)],
+        schema=fact.schema,
+    )
+    facts = fact.unionByName(const)
+    keys = [(r.country, r.antigen) for r in dimension_index(facts).collect()]
+    series = {
+        k: [(r.year, r.coverage_pct) for r in coverage_series(facts, *k).collect()]
+        for k in keys
+    }
+    for start, pre, post in _PARITY_WINDOWS:
+        expected = {
+            (r.country, r.antigen): r
+            for r in window_compare(facts, start, pre, post).collect()
+        }
+        assert set(expected) == set(keys)
+        for k in keys:
+            want = expected[k].asDict()
+            del want["country"], want["antigen"]
+            got = series_window_stats(series[k], start, pre, post).asDict()
+            assert list(got) == list(want)
+            for field, w in want.items():
+                g = got[field]
+                where = (k, (start, pre, post), field)
+                if w is None or isinstance(w, str):
+                    assert g == w, where
+                else:
+                    assert g == pytest.approx(w, rel=1e-9), where
+    # the constant windows really were exercised
+    flat = series_window_stats(series[("Constland", "coverage__bcg")], 2013, 2, 2)
+    assert flat.var_before == 0.0 and flat.t_stat is None
+    assert flat.significance == "insufficient-data"
+    half = series_window_stats(series[("Constland", "coverage__bcg")], 2017, 5, 3)
+    assert half.var_before == 0.0 and half.t_stat is not None

@@ -777,3 +777,17 @@ def test_signlsh_geometry_certification_scale_fixed():
         assert 1.0 - (1.0 - p) ** tables >= floor - 1e-12
         # occupancy stays near the target (within 2x)
         assert n / (1 << bits) <= 2048
+
+
+def test_signlsh_geometry_threshold_one_large_corpus():
+    """A threshold clamped to 1.0 makes every table collide (p1 = 1);
+    past the 2^8-bucket occupancy target the geometry must fall back to
+    the minimum table count instead of taking log(0)."""
+    from world_vaccination_coverage_etl_spark.operators.dedup import (
+        _signlsh_geometry,
+    )
+
+    for threshold in (1.0, 1.5):
+        assert _signlsh_geometry(65_536, threshold) == (8, 12)
+        bits, tables = _signlsh_geometry(1_000_000, threshold)
+        assert bits > 8 and tables == 12

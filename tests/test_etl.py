@@ -131,3 +131,51 @@ def test_cli_main_writes_csv_and_chart_artifacts(spark, tmp_path):
     assert doc.count("<svg") == 2          # line chart + CI bars, inline
     assert "Policy brief" in doc and 'class="kpi"' in doc
     assert "fill-opacity" in doc           # shaded campaign windows
+
+
+def test_stage_csv_passes_local_path_through(tmp_path):
+    from world_vaccination_coverage_etl_spark.sources.csv_source import stage_csv
+
+    local = str(tmp_path / "wide.csv")
+    assert stage_csv(local) == local
+
+
+def test_stage_csv_downloads_http_url(tmp_path):
+    import functools
+    import threading
+    from http.server import SimpleHTTPRequestHandler, ThreadingHTTPServer
+
+    from world_vaccination_coverage_etl_spark.sources.csv_source import stage_csv
+
+    body = "entity,year,coverage__bcg\nAland,1991,72.0\n"
+    (tmp_path / "wide.csv").write_text(body)
+
+    class Quiet(SimpleHTTPRequestHandler):
+        def log_message(self, *args):
+            pass
+
+    server = ThreadingHTTPServer(
+        ("127.0.0.1", 0), functools.partial(Quiet, directory=str(tmp_path))
+    )
+    t = threading.Thread(target=server.serve_forever, daemon=True)
+    t.start()
+    try:
+        url = f"http://127.0.0.1:{server.server_address[1]}/wide.csv"
+        staged = stage_csv(url)
+    finally:
+        server.shutdown()
+        server.server_close()
+    assert staged != url and not staged.startswith(str(tmp_path))
+    with open(staged) as fh:
+        assert fh.read() == body
+
+
+def test_default_cpus_is_usable_core_count(monkeypatch):
+    import os
+
+    from world_vaccination_coverage_etl_spark.session import default_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3

@@ -20,7 +20,7 @@ WIDE_ROWS = [
 
 
 @pytest.fixture(scope="module")
-def served(spark):
+def clean(spark):
     from world_vaccination_coverage_etl_spark.plans.pipeline import (
         clean_immunization,
         melt_wide_to_tidy,
@@ -31,7 +31,11 @@ def served(spark):
         schema="Entity string, year int, coverage__bcg double, "
         "coverage__dtp3 double",
     )
-    clean = clean_immunization(melt_wide_to_tidy(wide))
+    return clean_immunization(melt_wide_to_tidy(wide))
+
+
+@pytest.fixture(scope="module")
+def served(spark, clean):
     server = make_server(DashboardApp(spark, clean), port=0)
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()
@@ -83,6 +87,58 @@ def test_dashboard_params_change_result(served):
     _, dtp3 = _get(served + "/dashboard?country=Aland&antigen=coverage__dtp3")
     assert bcg != dtp3
     assert "coverage__dtp3" in dtp3 and "coverage__dtp3" not in bcg
+
+
+@pytest.mark.parametrize(
+    "country,antigen,window",
+    [("Aland", "coverage__bcg", (2017, 5, 5)),
+     ("Aland", "coverage__dtp3", (2014, 3, 2)),
+     ("Borland", "coverage__bcg", (2012, 2, 2))],
+)
+def test_dashboard_kpis_equal_window_compare(served, clean, country, antigen, window):
+    """The served KPIs, computed in-process from the collected series,
+    read the same as the grouped window_compare plan's row."""
+    from world_vaccination_coverage_etl_spark.functions.dashboard import _fmt, _kpi
+    from world_vaccination_coverage_etl_spark.plans.analytics import window_compare
+
+    start, pre, post = window
+    want = window_compare(
+        clean.filter((clean.country == country) & (clean.antigen == antigen)),
+        start, pre, post,
+    ).collect()[0]
+    status, body = _get(
+        served + f"/dashboard?country={country}&antigen={antigen}"
+        f"&start_year={start}&pre_years={pre}&post_years={post}"
+    )
+    assert status == 200
+    assert _kpi("avg before", _fmt(want.avg_before, "%")) in body
+    assert _kpi("avg after", _fmt(want.avg_after, "%")) in body
+    assert _kpi("p-value", _fmt(want.p_value, "", 4)) in body
+
+
+def test_serve_main_builds_warehouse_and_serves(spark, tmp_path, monkeypatch, capsys):
+    from http.server import ThreadingHTTPServer
+
+    from world_vaccination_coverage_etl_spark import serve
+
+    def stop(self, *a, **k):
+        raise KeyboardInterrupt
+
+    monkeypatch.setattr(ThreadingHTTPServer, "serve_forever", stop)
+    csv = tmp_path / "wide.csv"
+    csv.write_text(
+        "entity,year,coverage__bcg,coverage__dtp3\n"
+        + "\n".join(
+            ",".join("" if v is None else str(v) for v in row) for row in WIDE_ROWS
+        )
+        + "\n"
+    )
+    rc = serve.main(
+        ["--csv", str(csv), "--warehouse", str(tmp_path / "wh"), "--port", "0"]
+    )
+    assert rc == 0
+    assert "serving on http://127.0.0.1:" in capsys.readouterr().out
+    assert (tmp_path / "wh" / "immunization").is_dir()
 
 
 def test_dashboard_missing_series_404(served):

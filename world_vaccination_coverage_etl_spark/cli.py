@@ -2,12 +2,13 @@
 
 Spark-native equivalent of the reference's ``python etl_pipeline.py``
 (SURVEY.md §3 EP1; reference etl_pipeline.py:184-195): always run the
-ETL, then — when ``--country``/``--antigen`` are given — slice that
-series, run the windowed comparison, print the analysis block, and save
-the raw-series CSV + chart + PDF-report artifacts (functions/chart.py —
-SVG here, PNG when matplotlib is importable; functions/report.py — a
-dependency-free minimal PDF).  Together these complete the reference
-EP1 artifact set (CSV + plot + report).
+ETL, then — when ``--country``/``--antigen`` are given — collect that
+series once, compute the windowed comparison from the collected rows
+(functions/stats.py ``series_window_stats``), print the analysis
+block, and save the raw-series CSV + chart + PDF-report artifacts
+(functions/chart.py — SVG here, PNG when matplotlib is importable;
+functions/report.py — a dependency-free minimal PDF).  Together these
+complete the reference EP1 artifact set (CSV + plot + report).
 
 Usage::
 
@@ -22,7 +23,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -30,10 +30,11 @@ from .functions.chart import save_series_chart
 from .functions.dashboard import save_dashboard_html
 from .functions.narrative import policy_brief
 from .functions.report import save_pdf_report
-from .plans.analytics import coverage_series, window_compare
+from .functions.stats import series_window_stats
+from .plans.analytics import coverage_series
 from .plans.pipeline import run_etl
 from .session import get_spark
-from .sources.csv_source import download_csv
+from .sources.csv_source import stage_csv
 from .sources.sinks import sanitize_filename, write_csv
 
 
@@ -65,21 +66,12 @@ def run_analysis(
     Returns False when the series is empty (reference
     etl_pipeline.py:120-122 warns and stops)."""
     series = coverage_series(clean, country, antigen)
-    if series.isEmpty():
+    series_rows = [(r.year, r.coverage_pct) for r in series.collect()]
+    if not series_rows:
         print(f"WARNING: no data found for {country} / {antigen}")
         return False
 
-    one = (
-        window_compare(
-            clean.filter(
-                (clean.country == country) & (clean.antigen == antigen)
-            ),
-            start_year,
-            pre_years,
-            post_years,
-        )
-        .collect()[0]
-    )
+    one = series_window_stats(series_rows, start_year, pre_years, post_years)
 
     print(f"\nAnalysis for {country} / {antigen}")
     print(
@@ -117,13 +109,12 @@ def run_analysis(
     print(f"  Saved raw series -> {artifact}")
 
     # chart artifact (reference etl_pipeline.py:157-172) — rendered from
-    # the already-collected ≤45-row series at the presentation edge
+    # the already-collected ≤46-row series at the presentation edge
     chart_base = os.path.join(
         out_dir, sanitize_filename(f"coverage_{country}_{antigen}")
     )
-    series_rows = series.collect()
     chart_path = save_series_chart(
-        [(r.year, r.coverage_pct) for r in series_rows],
+        series_rows,
         chart_base,
         title=f"{country} — {antigen}",
         campaign_year=start_year,
@@ -146,11 +137,11 @@ def run_analysis(
             f"Implication: {implication}",
             f"Action: {action}",
         ],
-        table_rows=[(r.year, f"{r.coverage_pct:.1f}") for r in series_rows],
+        table_rows=[(year, f"{cov:.1f}") for year, cov in series_rows],
         table_header=("year", "coverage_pct"),
         cover_subtitle="Policy report for country vaccination coverage monitoring",
         cover_context=[f"Country: {country}", f"Antigen: {antigen}"],
-        series=[(r.year, r.coverage_pct) for r in series_rows],
+        series=series_rows,
         campaign_year=start_year,
     )
     print(f"  Saved report     -> {report_path}")
@@ -161,7 +152,7 @@ def run_analysis(
         chart_base + ".html",
         country,
         antigen,
-        [(r.year, r.coverage_pct) for r in series_rows],
+        series_rows,
         one,
         start_year,
         pre_years,
@@ -175,12 +166,7 @@ def main(argv: list[str] | None = None) -> int:
     args = _parse_args(argv)
     spark = get_spark("world_vaccination_coverage_etl_cli")
 
-    csv_path = args.csv
-    if csv_path.startswith(("http://", "https://")):
-        staging = os.path.join(tempfile.mkdtemp(prefix="vax_staging_"), "wide.csv")
-        csv_path = download_csv(csv_path, staging)
-
-    clean = run_etl(spark, csv_path, args.warehouse)
+    clean = run_etl(spark, stage_csv(args.csv), args.warehouse)
     print(f"ETL complete: {clean.count()} clean rows -> {args.warehouse}")
 
     if args.country and args.antigen:

@@ -6,15 +6,16 @@ KPI metric cards, a plotly line chart with shaded before/after
 campaign windows, a CI bar chart, the Welch verdict, and a policy
 brief (reference streamlit_app.py:176-505;
 global_vaccination_coverage_explorer_app.py:191-452).  A Spark engine
-has no widget loop, so the equivalent surface is an EXPORT: every
-number comes from the same distributed plans the CLI uses
-(plans/analytics.py `coverage_series` / `window_compare`), collected
-once at the presentation edge and rendered into one dependency-free
-self-contained HTML file (inline SVG charts, no JS, no CDN).
+has no widget loop, so the equivalent surface is an EXPORT: the series
+comes from the distributed `coverage_series` plan (plans/analytics.py),
+collected once at the presentation edge; the before/after window block
+is computed from those rows in-process (functions/stats.py
+`series_window_stats`, the one-series form of the grouped
+`window_compare` plan); both are rendered into one dependency-free
+self-contained HTML file (inline SVG charts, no CDN).
 
-Interactivity (the widget loop, `st.cache_data`, CSV download button)
-is deliberately out of scope — SURVEY.md §2.1/§3 classifies it as
-presentation-edge; the cache analogue is `cached_dimension_index`.
+The widget loop itself is serve.py, which renders this same view per
+request; `st.cache_data`'s analogue is `cached_dimension_index`.
 """
 
 from __future__ import annotations
@@ -128,7 +129,8 @@ def render_dashboard_html(
     post_years: int,
 ) -> str:
     """Render the one-series dashboard view as a self-contained HTML
-    string.  ``stats`` is one collected `window_compare` row."""
+    string.  ``stats`` is one `series_window_stats` (or collected
+    `window_compare`) row."""
     if not series_rows:
         raise ValueError(
             "cannot render a dashboard for an empty series "
@@ -186,8 +188,8 @@ def render_dashboard_html(
 <table><tr><th>year</th><th>coverage %</th></tr>
 {rows_html}
 </table>
-<footer>generated {dt.date.today().isoformat()} — static export; every number
-computed by the distributed plans in plans/analytics.py</footer>
+<footer>generated {dt.date.today().isoformat()} — static export; series from
+the coverage_series plan, window statistics computed from that series</footer>
 </body></html>
 """
 

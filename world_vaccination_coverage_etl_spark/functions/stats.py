@@ -8,6 +8,12 @@ half-widths, CDF for p-values) leave the JVM, as vectorized pandas UDFs
 applied to the already-aggregated (one row per group) frame.  That keeps
 Python work at O(groups) regardless of input scale.
 
+``series_window_stats`` is the one-series form of the same block: the
+dashboard and the CLI already hold the collected ≤46-row series, so
+they compute the window statistics in-process from those rows instead
+of running a second Spark job (the reference does the same —
+streamlit_app.py:317-342).
+
 Reference semantics preserved exactly (SURVEY.md §4):
 - CI is (NaN, NaN) when n < 2 (reference etl_pipeline.py:38-39);
 - Welch t-test gated on n > 1 in both windows (etl_pipeline.py:136);
@@ -16,9 +22,12 @@ Reference semantics preserved exactly (SURVEY.md §4):
 
 from __future__ import annotations
 
+import math
+from collections.abc import Iterable
+
 import pandas as pd
 
-from pyspark.sql import Column
+from pyspark.sql import Column, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -109,3 +118,83 @@ def mean_ci_columns(
     crit = t_crit_udf(F.lit(float(conf)), (n - 1).cast("double"))
     half = F.when(n >= 2, sem * crit)
     return (mean - half, mean + half)
+
+
+def _window_moments(values: list[float]) -> tuple[int, float | None, float | None]:
+    """(n, mean, var_samp) with Spark's NULL rules: mean NULL at n = 0,
+    variance NULL at n < 2.  Welford updates, as Spark's central-moment
+    aggregate, so a constant window has exactly zero variance."""
+    mean = m2 = 0.0
+    for k, x in enumerate(values, 1):
+        delta = x - mean
+        mean += delta / k
+        m2 += delta * (x - mean)
+    n = len(values)
+    return n, (mean if n else None), (m2 / (n - 1) if n > 1 else None)
+
+
+def series_window_stats(
+    rows: Iterable[tuple[int, float | None]],
+    start_year: int,
+    pre_years: int = 5,
+    post_years: int = 5,
+    conf: float = 0.95,
+) -> Row:
+    """``window_compare``'s statistics for one collected series.
+
+    ``rows`` are the ``(year, coverage_pct)`` pairs of one series.
+    Returns a ``Row`` with ``window_compare``'s fields minus the group
+    keys, under the same windows, kernels and NULL gating: CI bounds
+    NULL at n < 2, Welch t/df/p NULL unless both windows have n > 1,
+    and NULL where ``try_divide`` would divide by zero (both windows
+    constant).
+    """
+    before: list[float] = []
+    after: list[float] = []
+    for year, value in rows:
+        if value is None:
+            continue
+        if start_year - pre_years <= year <= start_year - 1:
+            before.append(float(value))
+        elif start_year <= year <= start_year + post_years:
+            after.append(float(value))
+    n_b, avg_b, var_b = _window_moments(before)
+    n_a, avg_a, var_a = _window_moments(after)
+    sd_b = math.sqrt(var_b) if var_b is not None else None
+    sd_a = math.sqrt(var_a) if var_a is not None else None
+
+    def ci(mean, sd, n):
+        if n < 2:
+            return None, None
+        half = sd / math.sqrt(n) * float(t_ppf((1.0 + conf) / 2.0, n - 1.0))
+        return mean - half, mean + half
+
+    t_stat = dof = p_value = None
+    if n_b > 1 and n_a > 1:
+        se2_b, se2_a = var_b / n_b, var_a / n_a
+        se2 = se2_b + se2_a
+        if se2 != 0.0:
+            t_stat = (avg_b - avg_a) / math.sqrt(se2)
+            dof = se2**2 / (se2_b**2 / (n_b - 1) + se2_a**2 / (n_a - 1))
+            p_value = min(max(2.0 * float(t_sf(abs(t_stat), dof)), 0.0), 1.0)
+    diff_pp = avg_a - avg_b if n_a and n_b else None
+    if p_value is None:
+        significance = "insufficient-data"
+    elif p_value < 0.05 and diff_pp > 0:
+        significance = "significant-increase"
+    elif p_value < 0.05 and diff_pp < 0:
+        significance = "significant-decrease"
+    else:
+        significance = "inconclusive"
+    ci_lo_b, ci_hi_b = ci(avg_b, sd_b, n_b)
+    ci_lo_a, ci_hi_a = ci(avg_a, sd_a, n_a)
+    return Row(
+        avg_before=avg_b, avg_after=avg_a,
+        var_before=var_b, var_after=var_a,
+        sd_before=sd_b, sd_after=sd_a,
+        n_before=n_b, n_after=n_a,
+        diff_pp=diff_pp, t_stat=t_stat, dof=dof,
+        ci_lo_before=ci_lo_b, ci_hi_before=ci_hi_b,
+        ci_lo_after=ci_lo_a, ci_hi_after=ci_hi_a,
+        p_value=p_value, significance=significance,
+    )

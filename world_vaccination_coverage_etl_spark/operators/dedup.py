@@ -1699,6 +1699,10 @@ def _signlsh_geometry(
         )
     if bits <= 8:
         return 8, 12  # the documented certified geometry, verbatim
+    if p1 >= 1.0:
+        # threshold clamped to 1.0: every table collides, the recall
+        # bound below would take log(0); the minimum table count suffices
+        return bits, 12
     target_recall = 1.0 - (1.0 - p1**8) ** 12  # fixed-geometry bound
     p = p1**bits
     tables = max(12, math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - p)))

@@ -3,7 +3,8 @@ without Streamlit.
 
 The reference serves an interactive explorer (streamlit_app.py:135-191:
 country/antigen selectboxes fed by the dimension index, every widget
-change re-runs the parameterized series + window-compare queries).
+change runs one indexed series lookup, then computes the Welch test and
+CIs in-process on that short series — streamlit_app.py:317-342).
 Streamlit doesn't exist in this environment, so this module provides
 the same interaction loop over stdlib ``http.server``:
 
@@ -11,22 +12,22 @@ the same interaction loop over stdlib ``http.server``:
   antigen) dimension index (plans/analytics.py cached_dimension_index,
   the same session-cached index the reference's selectboxes read);
 - ``GET /dashboard?country=..&antigen=..&start_year=..&pre_years=..&
-  post_years=..`` — re-runs the SAME distributed plans the CLI uses
-  (coverage_series + window_compare) with the requested parameters and
-  renders functions/dashboard.py's HTML (KPI cards, shaded-window
-  chart, CI bars, policy brief).
+  post_years=..`` — runs the parameterized ``coverage_series`` plan
+  (one Spark action, the ≤46-row series collect), computes the
+  before/after window block from those rows with
+  functions/stats.py ``series_window_stats`` (the same statistics as
+  the grouped ``window_compare`` plan), and renders
+  functions/dashboard.py's HTML (KPI cards, shaded-window chart, CI
+  bars, policy brief).
 
-Every request is a fresh parameterized Spark query against the
-warehouse — the widget → query → render loop, with the engine work
-distributed and only the ≤45-row series collected, exactly like the
-CLI edge.  The server is single-Spark-session, multi-request; thread
-safety comes from the handler lock (Spark actions are serialized, the
-simple safe default for a dashboard).
+The server is single-Spark-session, multi-request; Spark actions are
+serialized by the app lock, which is held only around the series
+collect — the window statistics and the render run outside it.
 
 Usage::
 
     python -m world_vaccination_coverage_etl_spark.serve \
-        --warehouse ./warehouse [--port 8099]
+        --csv data.csv --warehouse ./warehouse [--port 8099]
 """
 
 from __future__ import annotations
@@ -39,10 +40,12 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pyspark.sql import DataFrame, SparkSession
 
 from .functions.dashboard import render_dashboard_html
+from .functions.stats import series_window_stats
 from .plans.analytics import (
     cached_dimension_index,
     coverage_series,
-    window_compare,
+    # not called here; kept because perfbench/spans.py wraps serve.window_compare by name
+    window_compare,  # noqa: F401
 )
 
 
@@ -65,7 +68,8 @@ def _picker_html(pairs: list[tuple[str, str]]) -> str:
 
 
 class DashboardApp:
-    """Request → parameterized Spark query → HTML render."""
+    """Request → one parameterized Spark query → in-process window
+    statistics → HTML render."""
 
     def __init__(self, spark: SparkSession, clean: DataFrame):
         self.spark = spark
@@ -99,24 +103,13 @@ class DashboardApp:
                 (r["year"], r["coverage_pct"])
                 for r in coverage_series(self.clean, country, antigen).collect()
             ]
-            if not series_rows:
-                return (
-                    404,
-                    f"<h1>404</h1><p>no data for {html.escape(country)} / "
-                    f"{html.escape(antigen)}</p>",
-                )
-            stats = (
-                window_compare(
-                    self.clean.filter(
-                        (self.clean.country == country)
-                        & (self.clean.antigen == antigen)
-                    ),
-                    start_year,
-                    pre_years,
-                    post_years,
-                )
-                .collect()[0]
+        if not series_rows:
+            return (
+                404,
+                f"<h1>404</h1><p>no data for {html.escape(country)} / "
+                f"{html.escape(antigen)}</p>",
             )
+        stats = series_window_stats(series_rows, start_year, pre_years, post_years)
         return 200, render_dashboard_html(
             country, antigen, series_rows, stats, start_year, pre_years, post_years
         )
@@ -155,7 +148,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from .plans.pipeline import run_etl
     from .session import get_spark
-    from .sources.csv_source import download_csv
+    from .sources.csv_source import stage_csv
 
     p = argparse.ArgumentParser(description="coverage dashboard server")
     p.add_argument("--csv", required=True, help="wide CSV path or http(s) URL")
@@ -164,8 +157,7 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
 
     spark = get_spark("coverage-dashboard")
-    csv_path = download_csv(args.csv)
-    clean = run_etl(spark, csv_path, args.warehouse)
+    clean = run_etl(spark, stage_csv(args.csv), args.warehouse)
     server = make_server(DashboardApp(spark, clean), args.port)
     print(f"serving on http://127.0.0.1:{server.server_address[1]}/")
     try:

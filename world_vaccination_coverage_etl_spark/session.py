@@ -15,7 +15,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` when set, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -31,7 +34,7 @@ def get_spark(
     skew splitting, so ``shuffle_partitions`` is an upper bound, not a
     hand-tuned constant.
     """
-    cpus = DEFAULT_CPUS
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or cpus
 
