@@ -23,6 +23,7 @@ Reference semantics preserved exactly (SURVEY.md §4):
 from __future__ import annotations
 
 import math
+import statistics
 from collections.abc import Iterable
 
 import pandas as pd
@@ -120,19 +121,6 @@ def mean_ci_columns(
     return (mean - half, mean + half)
 
 
-def _window_moments(values: list[float]) -> tuple[int, float | None, float | None]:
-    """(n, mean, var_samp) with Spark's NULL rules: mean NULL at n = 0,
-    variance NULL at n < 2.  Welford updates, as Spark's central-moment
-    aggregate, so a constant window has exactly zero variance."""
-    mean = m2 = 0.0
-    for k, x in enumerate(values, 1):
-        delta = x - mean
-        mean += delta / k
-        m2 += delta * (x - mean)
-    n = len(values)
-    return n, (mean if n else None), (m2 / (n - 1) if n > 1 else None)
-
-
 def series_window_stats(
     rows: Iterable[tuple[int, float | None]],
     start_year: int,
@@ -158,8 +146,13 @@ def series_window_stats(
             before.append(float(value))
         elif start_year <= year <= start_year + post_years:
             after.append(float(value))
-    n_b, avg_b, var_b = _window_moments(before)
-    n_a, avg_a, var_a = _window_moments(after)
+    # statistics.variance is exact (rational arithmetic), so a constant
+    # window has exactly zero variance, as under Spark's var_samp.
+    n_b, n_a = len(before), len(after)
+    avg_b = statistics.fmean(before) if n_b else None
+    avg_a = statistics.fmean(after) if n_a else None
+    var_b = statistics.variance(before) if n_b > 1 else None
+    var_a = statistics.variance(after) if n_a > 1 else None
     sd_b = math.sqrt(var_b) if var_b is not None else None
     sd_a = math.sqrt(var_a) if var_a is not None else None
 

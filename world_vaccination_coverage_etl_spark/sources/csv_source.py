@@ -36,13 +36,13 @@ def download_csv(url: str, staging_path: str, timeout: float = DEFAULT_TIMEOUT_S
     return staging_path
 
 
-def stage_csv(path_or_url: str, timeout: float = DEFAULT_TIMEOUT_S) -> str:
+def stage_csv(path_or_url: str) -> str:
     """Local path for a ``--csv`` argument: an http(s) URL is downloaded
     to a fresh staging directory, anything else passes through unchanged."""
     if not path_or_url.startswith(("http://", "https://")):
         return path_or_url
     staging = os.path.join(tempfile.mkdtemp(prefix="vax_staging_"), "wide.csv")
-    return download_csv(path_or_url, staging, timeout)
+    return download_csv(path_or_url, staging)
 
 
 def read_wide_csv(spark: SparkSession, path: str) -> DataFrame:
