@@ -93,14 +93,15 @@ def coverage_series(fact: DataFrame, country: str, antigen: str) -> DataFrame:
     parquet scan (partition pruning on antigen + row-group skipping).
 
     A series holds at most one row per year of the clean table's
-    [1980, 2100] clamp, so the filtered rows are gathered into one
-    partition and sorted there: a collect runs 2 Spark jobs instead of
-    the 3 of a range-partitioned ``orderBy``, whose sampling job scans
-    the input a second time.  The scan itself stays parallel."""
+    [1980, 2100] clamp, so the pruned scan is coalesced into one task
+    and sorted there: a collect is 1 Spark job of 1 task with no
+    shuffle (so no adaptive re-planning), instead of the 3 jobs of a
+    range-partitioned ``orderBy``, whose sampling job scans the input a
+    second time.  The scan reads the one antigen partition serially."""
     return (
         fact.filter((F.col("country") == F.lit(country)) & (F.col("antigen") == F.lit(antigen)))
         .select("year", "coverage_pct")
-        .repartition(1)
+        .coalesce(1)
         .sortWithinPartitions("year")
     )
 
