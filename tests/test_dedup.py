@@ -791,3 +791,38 @@ def test_signlsh_geometry_threshold_one_large_corpus():
         assert _signlsh_geometry(65_536, threshold) == (8, 12)
         bits, tables = _signlsh_geometry(1_000_000, threshold)
         assert bits > 8 and tables == 12
+
+
+def test_explicit_lsh_bits_auto_tables_keeps_recall_bound(spark, monkeypatch):
+    """An explicit ``lsh_bits`` above 8 with ``lsh_tables="auto"`` must
+    get enough tables to keep the certified (8, 12) recall bound at
+    c = 0.95 (12 tables at 14 bits would give ~0.95)."""
+    import math
+
+    import pytest
+
+    from world_vaccination_coverage_etl_spark.operators import dedup
+
+    class Resolved(Exception):
+        pass
+
+    seen = {}
+
+    def capture(dim, bits, tables, seed):
+        seen.update(bits=bits, tables=tables)
+        raise Resolved
+
+    monkeypatch.setattr(dedup, "_signlsh_table_buckets", capture)
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(Resolved):
+        dedup.embedding_cosine_dup_pairs(
+            df, threshold=0.95, lsh_bits=14, lsh_tables="auto", dim=4
+        )
+    p1 = 1.0 - math.acos(0.95) / math.pi
+    floor = 1.0 - (1.0 - p1**8) ** 12
+    assert seen["bits"] == 14
+    assert 1.0 - (1.0 - p1**14) ** seen["tables"] >= floor - 1e-12
+    assert seen["tables"] == dedup._signlsh_tables(14, 0.95)
+    assert dedup._signlsh_tables(8, 0.95) == 12

@@ -24,6 +24,13 @@ WIDE_ROWS = [
 ]
 
 
+def _write_wide_csv(path, rows):
+    header = "entity,year,coverage__bcg,coverage__dtp3,unrelated_col\n"
+    lines = [",".join("" if v is None else str(v) for v in row) for row in rows]
+    path.write_text(header + "\n".join(lines) + "\n")
+    return path
+
+
 @pytest.fixture(scope="module")
 def wide_df(spark):
     return spark.createDataFrame(
@@ -70,12 +77,7 @@ def test_clean_clamps_years_and_dedups(wide_df, spark):
 
 
 def test_run_etl_end_to_end(spark, tmp_path):
-    csv = tmp_path / "wide.csv"
-    header = "entity,year,coverage__bcg,coverage__dtp3,unrelated_col\n"
-    lines = [
-        ",".join("" if v is None else str(v) for v in row) for row in WIDE_ROWS
-    ]
-    csv.write_text(header + "\n".join(lines) + "\n")
+    csv = _write_wide_csv(tmp_path / "wide.csv", WIDE_ROWS)
 
     clean = run_etl(spark, str(csv), str(tmp_path / "warehouse"))
     assert clean.count() == 5
@@ -89,17 +91,160 @@ def test_run_etl_end_to_end(spark, tmp_path):
     assert raw.count() == len(WIDE_ROWS)
 
 
+def test_run_etl_writes_one_file_per_antigen(spark, tmp_path):
+    """The clean table is hash-partitioned by antigen before its write,
+    so each antigen directory holds exactly one parquet file however
+    many shuffle partitions the write runs (AQE coalescing is off here,
+    or this tiny input would reach the write as one partition anyway)."""
+    rows = [
+        (f"C{i:02d}", 1980 + y, 50.0 + y, 60.0 + i, "x")
+        for i in range(12)
+        for y in range(5)
+    ]
+    csv = _write_wide_csv(tmp_path / "wide.csv", rows)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    coalesce = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        clean = run_etl(spark, str(csv), str(tmp_path / "warehouse"))
+    finally:
+        spark.conf.set(key, coalesce)
+    assert clean.count() == 2 * len(rows)
+    antigen_dirs = list((tmp_path / "warehouse" / "immunization").glob("antigen=*"))
+    assert len(antigen_dirs) == 2
+    for d in antigen_dirs:
+        assert len(list(d.glob("*.parquet"))) == 1, d.name
+
+
+def test_clean_plan_has_one_exchange(wide_df):
+    """The antigen hash partitioning also satisfies the dedup's
+    distribution: the clean plan shuffles once."""
+    clean = clean_immunization(melt_wide_to_tidy(wide_df))
+    plan = clean._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert "hashpartitioning(antigen" in plan
+
+
+def _fail_raw_write(monkeypatch, exc):
+    from world_vaccination_coverage_etl_spark.plans import pipeline
+    from world_vaccination_coverage_etl_spark.schemas import TABLE_RAW
+
+    real_write = pipeline.write_warehouse_table
+
+    def write(df, warehouse_dir, table, *a, **k):
+        if table == TABLE_RAW:
+            raise exc
+        return real_write(df, warehouse_dir, table, *a, **k)
+
+    monkeypatch.setattr(pipeline, "write_warehouse_table", write)
+
+
+def test_run_etl_raw_write_error_raised_after_clean_side(spark, tmp_path, monkeypatch):
+    """A failed raw write surfaces from run_etl, but only once the
+    clean chain (write, read-back, uniqueness check) has finished."""
+    from world_vaccination_coverage_etl_spark.plans import pipeline
+
+    boom = OSError("raw write failed")
+    _fail_raw_write(monkeypatch, boom)
+    checked = []
+    real_check = pipeline.assert_unique_key
+
+    def check(df, *a, **k):
+        real_check(df, *a, **k)
+        checked.append(df.count())
+
+    monkeypatch.setattr(pipeline, "assert_unique_key", check)
+    csv = _write_wide_csv(tmp_path / "wide.csv", WIDE_ROWS)
+    with pytest.raises(OSError) as err:
+        run_etl(spark, str(csv), str(tmp_path / "warehouse"))
+    assert err.value is boom
+    assert checked == [5]
+
+
+def test_run_etl_raises_first_error_when_both_sides_fail(spark, tmp_path, monkeypatch):
+    import threading
+
+    from world_vaccination_coverage_etl_spark.plans import pipeline
+    from world_vaccination_coverage_etl_spark.schemas import TABLE_RAW
+
+    raw_err = OSError("raw write failed")
+    raw_failing = threading.Event()
+    real_write = pipeline.write_warehouse_table
+
+    def write(df, warehouse_dir, table, *a, **k):
+        if table == TABLE_RAW:
+            raw_failing.set()
+            raise raw_err
+        return real_write(df, warehouse_dir, table, *a, **k)
+
+    waited = []
+
+    def check(df, *a, **k):
+        # fail the clean side only once the raw writer has failed and exited
+        waited.append(raw_failing.wait(timeout=120))
+        for t in threading.enumerate():
+            if t.name == "run_etl-raw-write":
+                t.join(timeout=120)
+                waited.append(not t.is_alive())
+        raise ValueError("clean side failed")
+
+    monkeypatch.setattr(pipeline, "write_warehouse_table", write)
+    monkeypatch.setattr(pipeline, "assert_unique_key", check)
+    csv = _write_wide_csv(tmp_path / "wide.csv", WIDE_ROWS)
+    with pytest.raises(OSError) as err:
+        run_etl(spark, str(csv), str(tmp_path / "warehouse"))
+    assert all(waited) and waited
+    assert err.value is raw_err
+
+
+def test_run_etl_raw_write_jobs_carry_callers_job_group(spark, tmp_path, monkeypatch):
+    """The raw write runs in a worker thread; its jobs still belong to
+    the job group the caller set.  The raw write is held until the clean
+    side is done, so the jobs the group gains during it are its own."""
+    import threading
+
+    from world_vaccination_coverage_etl_spark.plans import pipeline
+    from world_vaccination_coverage_etl_spark.schemas import TABLE_RAW
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    clean_done = threading.Event()
+    raw_jobs = []
+    real_write, real_check = pipeline.write_warehouse_table, pipeline.assert_unique_key
+
+    def write(df, warehouse_dir, table, *a, **k):
+        if table != TABLE_RAW:
+            return real_write(df, warehouse_dir, table, *a, **k)
+        assert clean_done.wait(timeout=120)
+        before = set(tracker.getJobIdsForGroup("etl-t"))
+        out = real_write(df, warehouse_dir, table, *a, **k)
+        raw_jobs.extend(set(tracker.getJobIdsForGroup("etl-t")) - before)
+        return out
+
+    def check(df, *a, **k):
+        real_check(df, *a, **k)
+        clean_done.set()
+
+    monkeypatch.setattr(pipeline, "write_warehouse_table", write)
+    monkeypatch.setattr(pipeline, "assert_unique_key", check)
+    csv = _write_wide_csv(tmp_path / "wide.csv", WIDE_ROWS)
+    sc.setJobGroup("etl-t", "job group of a refresh")
+    try:
+        run_etl(spark, str(csv), str(tmp_path / "warehouse"))
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    group = set(tracker.getJobIdsForGroup("etl-t"))
+    assert raw_jobs and set(raw_jobs) <= group
+    assert len(group) > len(raw_jobs)  # the clean side's jobs are in it too
+
+
 def test_cli_main_writes_csv_and_chart_artifacts(spark, tmp_path):
     """Full EP1 user experience: ETL + analysis block + CSV + chart
     (reference etl_pipeline.py:150-172)."""
     from world_vaccination_coverage_etl_spark.cli import main
 
-    csv = tmp_path / "wide.csv"
-    header = "entity,year,coverage__bcg,coverage__dtp3,unrelated_col\n"
-    lines = [
-        ",".join("" if v is None else str(v) for v in row) for row in WIDE_ROWS
-    ]
-    csv.write_text(header + "\n".join(lines) + "\n")
+    csv = _write_wide_csv(tmp_path / "wide.csv", WIDE_ROWS)
 
     rc = main(
         [

@@ -32,6 +32,15 @@ def _write(spark, path, rows):
         }
     )
     pq.write_table(table, str(path))
+    # the file source runs files in modification-time order at ms
+    # resolution; two quick writes usually tie and then run in directory
+    # listing order, so each file is stamped 1 s after the newest before it
+    import os
+
+    prior = [p.stat().st_mtime for p in path.parent.iterdir() if p != path]
+    if prior:
+        stamp = max(prior) + 1.0
+        os.utime(path, (stamp, stamp))
 
 
 def _accepted(spark, accepted_dir):

@@ -1690,7 +1690,6 @@ def _signlsh_geometry(
     """
     import math
 
-    p1 = 1.0 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
     bits = 8
     if n_rows > target_occupancy:
         bits = max(
@@ -1699,14 +1698,24 @@ def _signlsh_geometry(
         )
     if bits <= 8:
         return 8, 12  # the documented certified geometry, verbatim
-    if p1 >= 1.0:
-        # threshold clamped to 1.0: every table collides, the recall
-        # bound below would take log(0); the minimum table count suffices
-        return bits, 12
+    return bits, _signlsh_tables(bits, threshold)
+
+
+def _signlsh_tables(bits: int, threshold: float) -> int:
+    """Fewest tables (at least 12) that keep, at ``bits`` bits per
+    table, the recall bound the certified (8, 12) geometry gives at
+    ``threshold``: recall = 1 − (1−p)^T with p = (1 − θ/π)^bits, solved
+    for T (the union bound `_signlsh_geometry` documents)."""
+    import math
+
+    p1 = 1.0 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
+    if bits <= 8 or p1 >= 1.0:
+        # fewer bits only raise per-table recall; at p1 = 1 (threshold
+        # clamped to 1.0) every table collides and the bound would take log(0)
+        return 12
     target_recall = 1.0 - (1.0 - p1**8) ** 12  # fixed-geometry bound
     p = p1**bits
-    tables = max(12, math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - p)))
-    return bits, tables
+    return max(12, math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - p)))
 
 
 def _verify_by_bucket(df: DataFrame, kernel, out_schema: str) -> DataFrame:
@@ -1777,7 +1786,9 @@ def embedding_cosine_dup_pairs(
       count — certification-scale corpora get exactly (8, 12), bigger
       corpora get more bits (bounded bucket occupancy — the per-bucket
       verify is O(occ²), so fixed bits is quadratic in n) with tables
-      scaled to preserve the same recall bound.  Explicitly pass
+      scaled to preserve the same recall bound; an explicit
+      ``lsh_bits`` with ``lsh_tables="auto"`` gets its tables from the
+      same bound (`_signlsh_tables`).  Explicitly pass
       ``lsh_bits=0`` to force the full cross join (the recall oracle
       on small inputs).
 
@@ -1795,13 +1806,10 @@ def embedding_cosine_dup_pairs(
     if not block_col and lsh_bits == "auto":
         # one cheap count job sizes the geometry (same dispatch pattern
         # as ngram_jaccard_pairs_from_grams' prefix_filter="auto")
-        n_rows = vecs.count()
-        auto_bits, auto_tables = _signlsh_geometry(n_rows, threshold)
-        lsh_bits = auto_bits
-        if lsh_tables == "auto":
-            lsh_tables = auto_tables
-    if lsh_tables == "auto":
-        lsh_tables = 12
+        lsh_bits, _ = _signlsh_geometry(vecs.count(), threshold)
+    if not block_col and lsh_tables == "auto":
+        # explicit bits too: more bits need more tables for the same bound
+        lsh_tables = _signlsh_tables(lsh_bits, threshold)
 
     if block_col or lsh_bits <= 0:
         a, b = vecs.alias("a"), vecs.alias("b")

@@ -6,11 +6,12 @@ recompute (Arrow signature kernels) or grow lineage per round
 (label propagation).  ``stage()`` cuts the lineage two ways:
 
 - ``staging_dir=None`` (default, the local/bench path):
-  ``localCheckpoint(eager=False)`` — materialize per-executor on first
-  use, no temp-dir management.  Caveat at cluster scale: checkpointed
-  partitions PIN to the executors that computed them (no durable
-  copy), so executor loss forces recompute and dynamic allocation
-  can't release those hosts.
+  ``localCheckpoint(eager=True)`` — materialize per-executor once, when
+  ``stage()`` is called (so concurrent consumers never compute the
+  subtree twice), no temp-dir management.  Caveat at cluster scale:
+  checkpointed partitions PIN to the executors that computed them (no
+  durable copy), so executor loss forces recompute and dynamic
+  allocation can't release those hosts.
 - ``staging_dir=<path>``: write the intermediate to parquet and
   re-read it — a durable staging table any executor can scan, the
   per-stage-materialization pattern every large pipeline uses.  Costs

@@ -15,12 +15,16 @@ Reference behavior being reproduced (SURVEY.md §2.1-2.3, §3 EP1):
    (etl_pipeline.py:81-96).
 
 Everything is a lazy DataFrame transform — Catalyst prunes the untouched
-wide columns out of the scan, and the single shuffle in the whole plan
-is the dedup's hash aggregation on the composite key.
+wide columns out of the scan.  The single shuffle in the whole plan is a
+hash partitioning on ``antigen``: ``antigen`` is part of the composite
+key, so that one Exchange serves both the dedup's aggregation and the
+``partitionBy("antigen")`` warehouse write (every antigen lands in one
+task, so each antigen partition is one file).
 """
 
 from __future__ import annotations
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -82,12 +86,20 @@ def melt_wide_to_tidy(df: DataFrame, prefix: str = COVERAGE_PREFIX) -> DataFrame
 
 
 def clean_immunization(tidy: DataFrame) -> DataFrame:
-    """Clamp, cast, and enforce PK-style uniqueness on the tidy frame."""
+    """Clamp, cast, and enforce PK-style uniqueness on the tidy frame.
+
+    The frame is hash-partitioned by ``antigen`` right before the
+    dedup: that Exchange also satisfies the dedup's distribution on the
+    composite key, so the plan keeps exactly one shuffle, and a
+    ``partitionBy("antigen")`` write of the result gives one file per
+    antigen.
+    """
     return (
         tidy.withColumn("year", F.col("year").cast("int"))
         .withColumn("coverage_pct", F.col("coverage_pct").cast("double"))
         .filter(F.col("year").between(YEAR_MIN, YEAR_MAX))
         .na.drop(subset=["country", "antigen", "year"])
+        .repartition("antigen")
         .dropDuplicates(IMMUNIZATION_KEY)
         .select("country", "antigen", "year", "coverage_pct")
     )
@@ -111,15 +123,48 @@ def run_etl(
     """Full ETL: staging CSV → raw + clean warehouse tables.
 
     Returns the clean DataFrame (read back from the warehouse so callers
-    see exactly what was persisted).  ``partition_by`` defaults to
-    ``["antigen"]`` — low cardinality (~15) keeps file counts healthy at
-    any scale and serves the dashboards' (country, antigen) predicates
-    via partition pruning.
+    see exactly what was persisted, and checked by `assert_unique_key`).
+    ``partition_by`` defaults to ``["antigen"]`` — low cardinality (~15)
+    keeps file counts healthy at any scale and serves the dashboards'
+    (country, antigen) predicates via partition pruning.  With the
+    antigen hash partitioning of `clean_immunization` each antigen
+    directory holds one file; the trade-off is that the dedup's
+    parallelism is capped at the number of antigens (~15), whatever the
+    core count.
+
+    The raw copy depends on nothing but the scan, so it is written from
+    one worker thread while this thread runs the clean chain (clean
+    write → refresh → read-back → uniqueness check).  The worker is an
+    `InheritableThread`, so its jobs carry the caller's job group and
+    local properties.  It is always joined before this function returns
+    or raises; if either side fails, the error that happened first is
+    raised once both are done.
     """
     partition_by = ["antigen"] if partition_by is None else partition_by
     raw = read_wide_csv(spark, csv_path)
-    write_warehouse_table(raw, warehouse_dir, TABLE_RAW)
+    errors: list[BaseException] = []
 
+    def write_raw() -> None:
+        try:
+            write_warehouse_table(raw, warehouse_dir, TABLE_RAW)
+        except BaseException as e:  # re-raised by the caller's thread
+            errors.append(e)
+
+    raw_writer = InheritableThread(write_raw, session=spark, name="run_etl-raw-write")
+    raw_writer.start()
+    try:
+        out = _load_clean(spark, raw, warehouse_dir, partition_by)
+    except BaseException as e:
+        errors.append(e)
+    raw_writer.join()
+    if errors:
+        raise errors[0]
+    return out
+
+
+def _load_clean(
+    spark: SparkSession, raw: DataFrame, warehouse_dir: str, partition_by: list[str]
+) -> DataFrame:
     clean = clean_immunization(melt_wide_to_tidy(raw))
     write_warehouse_table(clean, warehouse_dir, TABLE_CLEAN, partition_by=partition_by)
     # refresh hook: a reload invalidates both the memoized dimension
