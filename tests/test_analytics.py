@@ -6,7 +6,9 @@ import math
 
 import pytest
 
-from world_vaccination_coverage_etl_spark.functions.stats import series_window_stats
+from world_vaccination_coverage_etl_spark.functions.stats import _t_crit, series_window_stats
+from world_vaccination_coverage_etl_spark.functions.tdist import t_ppf
+from world_vaccination_coverage_etl_spark.plans import analytics
 from world_vaccination_coverage_etl_spark.plans.analytics import (
     antigens_for_country,
     cached_dimension_index,
@@ -14,6 +16,7 @@ from world_vaccination_coverage_etl_spark.plans.analytics import (
     dimension_index,
     invalidate_dimension_index,
     series_kpis,
+    series_snapshot,
     window_compare,
 )
 
@@ -186,3 +189,71 @@ def test_series_window_stats_matches_window_compare(spark, fact):
     assert flat.significance == "insufficient-data"
     half = series_window_stats(series[("Constland", "coverage__bcg")], 2017, 5, 3)
     assert half.var_before == 0.0 and half.t_stat is not None
+
+
+def test_t_crit_is_t_ppf():
+    for conf in (0.9, 0.95, 0.99):
+        for dof in range(1, 121):
+            assert _t_crit(conf, dof) == float(t_ppf((1 + conf) / 2, dof)), (conf, dof)
+
+
+@pytest.fixture(scope="module")
+def facts(spark, fact):
+    """The fixture table plus a series that is constant up to 2016."""
+    const = spark.createDataFrame(
+        [("Constland", "coverage__bcg", y, 88.1 if y < 2017 else 90.0 + 1.5 * (y - 2017))
+         for y in range(2010, 2021)],
+        schema=fact.schema,
+    )
+    return fact.unionByName(const)
+
+
+def test_series_snapshot_matches_coverage_series(facts):
+    snap = series_snapshot(facts)
+    keys = [(r.country, r.antigen) for r in dimension_index(facts).collect()]
+    assert ("Constland", "coverage__bcg") in keys
+    assert list(snap.pairs) == keys
+    for k in keys:
+        want = [(r.year, r.coverage_pct) for r in coverage_series(facts, *k).collect()]
+        # same years, same order and exactly equal floats (no approx)
+        assert snap.rows(*k) == want, k
+    assert snap.rows("Nowhere", "coverage__bcg") == []
+
+
+def test_series_snapshot_refuses_above_limit(facts, monkeypatch):
+    n = facts.count()
+    monkeypatch.setattr(analytics, "SNAPSHOT_MAX_ROWS", n)
+    assert series_snapshot(facts) is not None
+    monkeypatch.setattr(analytics, "SNAPSHOT_MAX_ROWS", n - 1)
+    assert series_snapshot(facts) is None
+
+
+def test_series_snapshot_many_pairs_in_shuffled_order(spark):
+    """Thousands of series over several Arrow batches, in random row
+    order, with country names whose byte order is not their numeric
+    order: every series comes back whole, year-sorted, in the
+    ``dimension_index`` pair order."""
+    from pyspark.sql import functions as F
+
+    n_pairs, years = 3000, 40
+    pair = F.floor(F.col("id") / years)
+    fact = (
+        spark.range(n_pairs * years)
+        .select(
+            F.concat(F.lit("Côte "), (pair % 250).cast("string")).alias("country"),
+            F.concat(F.lit("ag"), F.floor(pair / 250).cast("string")).alias("antigen"),
+            (F.lit(1980) + F.col("id") % years).cast("int").alias("year"),
+            ((F.col("id") * 7919) % 1000 / 10.0).alias("coverage_pct"),
+        )
+        .orderBy(F.rand(7))
+    )
+    want: dict[tuple[str, str], list[tuple[int, float]]] = {}
+    for i in range(n_pairs * years):
+        p = i // years
+        key = (f"Côte {p % 250}", f"ag{p // 250}")
+        want.setdefault(key, []).append((1980 + i % years, (i * 7919) % 1000 / 10.0))
+    snap = series_snapshot(fact)
+    assert list(snap.pairs) == sorted(want)
+    assert list(snap.pairs) == [(r.country, r.antigen) for r in dimension_index(fact).collect()]
+    for key, rows in want.items():
+        assert snap.rows(*key) == rows, key

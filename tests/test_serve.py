@@ -5,9 +5,11 @@ from __future__ import annotations
 
 import threading
 import urllib.request
+from contextlib import contextmanager
 
 import pytest
 
+from world_vaccination_coverage_etl_spark import serve
 from world_vaccination_coverage_etl_spark.serve import DashboardApp, make_server
 
 WIDE_ROWS = [
@@ -34,23 +36,35 @@ def clean(spark):
     return clean_immunization(melt_wide_to_tidy(wide))
 
 
-@pytest.fixture(scope="module")
-def served(spark, clean):
-    server = make_server(DashboardApp(spark, clean), port=0)
+@contextmanager
+def _serving(app: DashboardApp):
+    """Serve `app` on an ephemeral port; yields the base URL."""
+    server = make_server(app, port=0)
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()
-    base = f"http://127.0.0.1:{server.server_address[1]}"
-    yield base
-    server.shutdown()
-    server.server_close()
+    try:
+        yield f"http://127.0.0.1:{server.server_address[1]}"
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
+@pytest.fixture(scope="module")
+def served(spark, clean):
+    """The snapshot serving path.  test_serve_spark_path.py runs the
+    page tests below again on the Spark path."""
+    app = DashboardApp(spark, clean)
+    assert app._snapshot is not None
+    with _serving(app) as base:
+        yield base
 
 
 def _get(url: str) -> tuple[int, str]:
-    # each request runs a Spark job in the server thread; under a
-    # saturated host (e.g. a concurrent 32-core sweep) a single
-    # attempt can exceed any fixed budget — retry with a generous
-    # per-attempt timeout so load cannot fail a correctness test
-    # (r10 verdict item 7)
+    # on the Spark path each request runs a Spark job in the server
+    # thread; under a saturated host (e.g. a concurrent 32-core sweep)
+    # a single attempt can exceed any fixed budget — retry with a
+    # generous per-attempt timeout so load cannot fail a correctness
+    # test (r10 verdict item 7)
     last: Exception | None = None
     for _ in range(3):
         try:
@@ -61,6 +75,14 @@ def _get(url: str) -> tuple[int, str]:
         except (TimeoutError, urllib.error.URLError) as e:
             last = e
     raise AssertionError(f"request kept timing out: {url}") from last
+
+
+def _write_csv(path, rows) -> None:
+    path.write_text(
+        "entity,year,coverage__bcg,coverage__dtp3\n"
+        + "\n".join(",".join("" if v is None else str(v) for v in row) for row in rows)
+        + "\n"
+    )
 
 
 def test_index_lists_dimension_pairs(served):
@@ -119,20 +141,12 @@ def test_dashboard_kpis_equal_window_compare(served, clean, country, antigen, wi
 def test_serve_main_builds_warehouse_and_serves(spark, tmp_path, monkeypatch, capsys):
     from http.server import ThreadingHTTPServer
 
-    from world_vaccination_coverage_etl_spark import serve
-
     def stop(self, *a, **k):
         raise KeyboardInterrupt
 
     monkeypatch.setattr(ThreadingHTTPServer, "serve_forever", stop)
     csv = tmp_path / "wide.csv"
-    csv.write_text(
-        "entity,year,coverage__bcg,coverage__dtp3\n"
-        + "\n".join(
-            ",".join("" if v is None else str(v) for v in row) for row in WIDE_ROWS
-        )
-        + "\n"
-    )
+    _write_csv(csv, WIDE_ROWS)
     rc = serve.main(
         ["--csv", str(csv), "--warehouse", str(tmp_path / "wh"), "--port", "0"]
     )
@@ -149,6 +163,57 @@ def test_dashboard_missing_series_404(served):
 def test_dashboard_requires_params(served):
     status, _ = _get(served + "/dashboard")
     assert status == 400
+
+
+def test_snapshot_path_runs_no_spark_query(spark, clean, monkeypatch):
+    app = DashboardApp(spark, clean)
+    assert app._snapshot is not None
+
+    def no_spark(*a, **k):
+        raise AssertionError("a snapshot request ran a Spark query")
+
+    monkeypatch.setattr(serve, "coverage_series", no_spark)
+    monkeypatch.setattr(serve, "cached_dimension_index", no_spark)
+    with _serving(app) as base:
+        status, body = _get(base + "/")
+        assert status == 200 and "Borland" in body
+        status, body = _get(base + "/dashboard?country=Aland&antigen=coverage__dtp3")
+        assert status == 200 and "Policy brief" in body
+        assert _get(base + "/dashboard?country=Nowhere&antigen=coverage__bcg")[0] == 404
+        assert _get(base + "/dashboard?country=Aland")[0] == 400
+
+
+def test_app_keeps_serving_its_snapshot_after_refresh(spark, tmp_path):
+    """An app serves the table as it was when it was constructed: a
+    refresh that overwrites the warehouse in place leaves it serving
+    the old values, and a new app serves the new ones."""
+    from world_vaccination_coverage_etl_spark.functions.dashboard import _fmt, _kpi
+    from world_vaccination_coverage_etl_spark.functions.stats import series_window_stats
+    from world_vaccination_coverage_etl_spark.plans.pipeline import run_etl
+
+    rows_b = [(c, y, bcg + 10.0, dtp3) for c, y, bcg, dtp3 in WIDE_ROWS]
+    csv_a, csv_b, wh = tmp_path / "a.csv", tmp_path / "b.csv", str(tmp_path / "wh")
+    _write_csv(csv_a, WIDE_ROWS)
+    _write_csv(csv_b, rows_b)
+
+    def kpis(rows) -> list[str]:
+        series = [(y, bcg) for c, y, bcg, _ in rows if c == "Aland"]
+        stats = series_window_stats(series, 2017, 5, 5)
+        return [
+            _kpi("latest coverage (2022)", _fmt(series[-1][1], "%")),
+            _kpi("avg before", _fmt(stats.avg_before, "%")),
+            _kpi("avg after", _fmt(stats.avg_after, "%")),
+        ]
+
+    url = "/dashboard?country=Aland&antigen=coverage__bcg&start_year=2017"
+    app_a = DashboardApp(spark, run_etl(spark, str(csv_a), wh))
+    app_b = DashboardApp(spark, run_etl(spark, str(csv_b), wh))
+    for app, rows in ((app_a, WIDE_ROWS), (app_b, rows_b)):
+        with _serving(app) as base:
+            status, body = _get(base + url)
+        assert status == 200
+        for kpi in kpis(rows):
+            assert kpi in body
 
 
 def test_interactive_series_html_fragment():

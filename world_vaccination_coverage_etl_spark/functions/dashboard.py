@@ -15,7 +15,11 @@ is computed from those rows in-process (functions/stats.py
 self-contained HTML file (inline SVG charts, no CDN).
 
 The widget loop itself is serve.py, which renders this same view per
-request; `st.cache_data`'s analogue is `cached_dimension_index`.
+request.  `st.cache_data`'s analogue there is the app's series snapshot
+(plans/analytics.py `series_snapshot`): the server reads each series
+from a driver-side copy of the clean table taken when the app is
+constructed, and falls back to `coverage_series` and
+`cached_dimension_index` only for a table too large to hold.
 """
 
 from __future__ import annotations
@@ -188,8 +192,8 @@ def render_dashboard_html(
 <table><tr><th>year</th><th>coverage %</th></tr>
 {rows_html}
 </table>
-<footer>generated {dt.date.today().isoformat()} — static export; series from
-the coverage_series plan, window statistics computed from that series</footer>
+<footer>generated {dt.date.today().isoformat()} — one (country, antigen) series
+of the clean warehouse table; window statistics computed from that series</footer>
 </body></html>
 """
 

@@ -9,10 +9,10 @@ applied to the already-aggregated (one row per group) frame.  That keeps
 Python work at O(groups) regardless of input scale.
 
 ``series_window_stats`` is the one-series form of the same block: the
-dashboard and the CLI already hold the collected ≤46-row series, so
-they compute the window statistics in-process from those rows instead
-of running a second Spark job (the reference does the same —
-streamlit_app.py:317-342).
+dashboard and the CLI already hold the ≤121-row series (one row per
+year of the clean table's [1980, 2100] clamp), so they compute the
+window statistics in-process from those rows instead of running a
+Spark job (the reference does the same — streamlit_app.py:317-342).
 
 Reference semantics preserved exactly (SURVEY.md §4):
 - CI is (NaN, NaN) when n < 2 (reference etl_pipeline.py:38-39);
@@ -22,6 +22,7 @@ Reference semantics preserved exactly (SURVEY.md §4):
 
 from __future__ import annotations
 
+import functools
 import math
 import statistics
 from collections.abc import Iterable
@@ -121,6 +122,16 @@ def mean_ci_columns(
     return (mean - half, mean + half)
 
 
+@functools.lru_cache(maxsize=1024)
+def _t_crit(conf: float, dof: float) -> float:
+    """Two-sided t critical value t_{(1+conf)/2, dof} as a float.
+
+    Memoized: ``series_window_stats`` asks for it twice per call, and
+    its inputs repeat (the window length minus one is a small integer),
+    while one ``t_ppf`` evaluation runs a dozen Halley iterations."""
+    return float(t_ppf((1.0 + conf) / 2.0, dof))
+
+
 def series_window_stats(
     rows: Iterable[tuple[int, float | None]],
     start_year: int,
@@ -159,7 +170,7 @@ def series_window_stats(
     def ci(mean, sd, n):
         if n < 2:
             return None, None
-        half = sd / math.sqrt(n) * float(t_ppf((1.0 + conf) / 2.0, n - 1.0))
+        half = sd / math.sqrt(n) * _t_crit(conf, n - 1.0)
         return mean - half, mean + half
 
     t_stat = dof = p_value = None

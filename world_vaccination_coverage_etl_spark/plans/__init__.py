@@ -13,6 +13,7 @@ from .analytics import (
     antigens_for_country,
     invalidate_dimension_index,
     series_kpis,
+    series_snapshot,
     window_compare,
 )
 
@@ -29,5 +30,6 @@ __all__ = [
     "antigens_for_country",
     "invalidate_dimension_index",
     "series_kpis",
+    "series_snapshot",
     "window_compare",
 ]

@@ -9,6 +9,8 @@ statistics from aggregates only.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -25,8 +27,9 @@ def dimension_index(fact: DataFrame) -> DataFrame:
 # semantic hash — the Spark analogue of the reference's
 # ``st.cache_data(ttl=3600)`` on its two hot queries
 # (streamlit_app.py:99,111).  ``.cache()`` pins the distinct result
-# (~10² rows) in executor memory; repeat dashboard calls skip the scan
-# + shuffle entirely.  Keyed by (session, semantic hash) — see
+# (~10² rows) in executor memory; repeat calls skip the scan + shuffle
+# entirely.  The dashboard server uses it only for a table too large
+# for ``series_snapshot``.  Keyed by (session, semantic hash) — see
 # cached_dimension_index.
 _DIM_INDEX_MEMO: dict[tuple[object, int], DataFrame] = {}
 
@@ -104,6 +107,69 @@ def coverage_series(fact: DataFrame, country: str, antigen: str) -> DataFrame:
         .coalesce(1)
         .sortWithinPartitions("year")
     )
+
+
+# The most rows ``series_snapshot`` holds on the driver.  A snapshot
+# keeps ~12 bytes of Arrow buffers per row (int32 year, float64
+# coverage), so ~25 MB at the limit; the build briefly also holds the
+# row's country and antigen strings.
+SNAPSHOT_MAX_ROWS = 2_000_000
+
+
+class SeriesSnapshot:
+    """Every (country, antigen) series of a fact table, held on the
+    driver: ``pairs`` in ``dimension_index`` order, and per pair the
+    year-sorted ``(year, coverage_pct)`` rows of ``coverage_series``
+    as zero-copy slices of one Arrow table."""
+
+    def __init__(self, series: dict[tuple[str, str], pa.Table]):
+        self._series = series
+        self.pairs = tuple(series)
+
+    def rows(self, country: str, antigen: str) -> list[tuple[int, float | None]]:
+        """The pair's series as ``coverage_series`` collects it; empty
+        when the pair is absent."""
+        part = self._series.get((country, antigen))
+        if part is None:
+            return []
+        return list(zip(part["year"].to_pylist(), part["coverage_pct"].to_pylist()))
+
+
+def series_snapshot(fact: DataFrame) -> SeriesSnapshot | None:
+    """All of ``fact``'s series from one Spark action, or None when
+    ``fact`` has more than ``SNAPSHOT_MAX_ROWS`` rows.
+
+    The scan is coalesced into one task under a limit of
+    ``SNAPSHOT_MAX_ROWS + 1`` rows, so the one ``toArrow()`` job stops
+    reading there and never brings more to the driver.  The rows are
+    sorted by (country, antigen, year) in Arrow, whose byte-wise string
+    order is Spark's, and cut into one slice per pair.  The country and
+    antigen columns are non-null in the clean table's contract."""
+    table = (
+        fact.select("country", "antigen", "year", "coverage_pct")
+        .coalesce(1)
+        .limit(SNAPSHOT_MAX_ROWS + 1)
+        .toArrow()
+    )
+    if table.num_rows > SNAPSHOT_MAX_ROWS:
+        return None
+    table = table.sort_by([("country", "ascending"), ("antigen", "ascending"),
+                           ("year", "ascending")]).combine_chunks()
+    country, antigen = table["country"], table["antigen"]
+    # a pair's run starts at row 0 and wherever either key changes
+    changed = pc.or_(pc.not_equal(country[1:], country[:-1]),
+                     pc.not_equal(antigen[1:], antigen[:-1]))
+    starts = [0, *pc.add(pc.indices_nonzero(changed), 1).to_pylist()] if len(table) else []
+    body = table.select(["year", "coverage_pct"])
+    series = {}
+    for c, a, start, stop in zip(
+        country.take(starts).to_pylist(),
+        antigen.take(starts).to_pylist(),
+        starts,
+        starts[1:] + [len(table)],
+    ):
+        series[(c, a)] = body.slice(start, stop - start)
+    return SeriesSnapshot(series)
 
 
 def series_kpis(fact: DataFrame, group_cols: list[str] | None = None) -> DataFrame:

@@ -4,25 +4,36 @@ without Streamlit.
 The reference serves an interactive explorer (streamlit_app.py:135-191:
 country/antigen selectboxes fed by the dimension index, every widget
 change runs one indexed series lookup, then computes the Welch test and
-CIs in-process on that short series — streamlit_app.py:317-342).
+CIs in-process on that short series — streamlit_app.py:317-342), and
+caches what it loads (``st.cache_data``, streamlit_app.py:99,111).
 Streamlit doesn't exist in this environment, so this module provides
-the same interaction loop over stdlib ``http.server``:
+the same interaction loop over stdlib ``http.server``.
 
-- ``GET /``                     — picker page listing the (country,
-  antigen) dimension index (plans/analytics.py cached_dimension_index,
-  the same session-cached index the reference's selectboxes read);
+A ``DashboardApp`` takes one snapshot of the clean table when it is
+constructed (plans/analytics.py ``series_snapshot``: one Spark action,
+every (country, antigen) series held on the driver), and renders the
+picker page from it once.  Requests then read the snapshot:
+
+- ``GET /``                     — the picker page listing the
+  (country, antigen) dimension index;
 - ``GET /dashboard?country=..&antigen=..&start_year=..&pre_years=..&
-  post_years=..`` — runs the parameterized ``coverage_series`` plan
-  (one Spark action, the ≤46-row series collect), computes the
-  before/after window block from those rows with
-  functions/stats.py ``series_window_stats`` (the same statistics as
-  the grouped ``window_compare`` plan), and renders
-  functions/dashboard.py's HTML (KPI cards, shaded-window chart, CI
-  bars, policy brief).
+  post_years=..`` — looks up the pair's ≤121-row series (one row per
+  year of the clean table's [1980, 2100] clamp), computes the
+  before/after window block from those rows with functions/stats.py
+  ``series_window_stats`` (the same statistics as the grouped
+  ``window_compare`` plan), and renders functions/dashboard.py's HTML
+  (KPI cards, shaded-window chart, CI bars, policy brief).
 
-The server is single-Spark-session, multi-request; Spark actions are
-serialized by the app lock, which is held only around the series
-collect — the window statistics and the render run outside it.
+On the snapshot path a request takes no lock and runs no Spark job.
+An app serves the table as it was when the app was constructed, so it
+is isolated from a refresh that overwrites the warehouse in place; a
+refreshed warehouse needs a new ``DashboardApp``.
+
+A table above ``SNAPSHOT_MAX_ROWS`` rows is served from Spark instead:
+``GET /`` reads ``cached_dimension_index`` and each dashboard request
+collects the parameterized ``coverage_series`` plan (one Spark job).
+The app lock serializes those Spark actions; the window statistics and
+the render run outside it.
 
 Usage::
 
@@ -44,6 +55,7 @@ from .functions.stats import series_window_stats
 from .plans.analytics import (
     cached_dimension_index,
     coverage_series,
+    series_snapshot,
     # not called here; kept because perfbench/spans.py wraps serve.window_compare by name
     window_compare,  # noqa: F401
 )
@@ -68,15 +80,22 @@ def _picker_html(pairs: list[tuple[str, str]]) -> str:
 
 
 class DashboardApp:
-    """Request → one parameterized Spark query → in-process window
-    statistics → HTML render."""
+    """Request → series lookup → in-process window statistics → HTML
+    render, over a snapshot of ``clean`` taken at construction (or, for
+    a table above ``SNAPSHOT_MAX_ROWS`` rows, one Spark query per
+    request under the app lock)."""
 
     def __init__(self, spark: SparkSession, clean: DataFrame):
         self.spark = spark
         self.clean = clean
         self._lock = threading.Lock()
+        self._snapshot = series_snapshot(clean)
+        if self._snapshot is not None:
+            self._index_html = _picker_html(self._snapshot.pairs)
 
     def index_page(self) -> str:
+        if self._snapshot is not None:
+            return self._index_html
         with self._lock:
             pairs = [
                 (r["country"], r["antigen"])
@@ -98,11 +117,14 @@ class DashboardApp:
         post_years = one("post_years", 5)
         if not country or not antigen:
             return 400, "<h1>400</h1><p>country and antigen are required</p>"
-        with self._lock:
-            series_rows = [
-                (r["year"], r["coverage_pct"])
-                for r in coverage_series(self.clean, country, antigen).collect()
-            ]
+        if self._snapshot is not None:
+            series_rows = self._snapshot.rows(country, antigen)
+        else:
+            with self._lock:
+                series_rows = [
+                    (r["year"], r["coverage_pct"])
+                    for r in coverage_series(self.clean, country, antigen).collect()
+                ]
         if not series_rows:
             return (
                 404,
