@@ -60,7 +60,7 @@ def served(spark, clean):
 
 
 def _get(url: str) -> tuple[int, str]:
-    # on the Spark path each request runs a Spark job in the server
+    # on the Spark path each request runs a Spark job in its handler
     # thread; under a saturated host (e.g. a concurrent 32-core sweep)
     # a single attempt can exceed any fixed budget — retry with a
     # generous per-attempt timeout so load cannot fail a correctness
@@ -181,6 +181,41 @@ def test_snapshot_path_runs_no_spark_query(spark, clean, monkeypatch):
         assert status == 200 and "Policy brief" in body
         assert _get(base + "/dashboard?country=Nowhere&antigen=coverage__bcg")[0] == 404
         assert _get(base + "/dashboard?country=Aland")[0] == 400
+
+
+def test_snapshot_request_runs_in_the_serving_thread(spark, clean, monkeypatch):
+    monkeypatch.setattr(serve, "READY_WAIT_S", 60.0)  # a slow host still sends in time
+    app = DashboardApp(spark, clean)
+    seen: list[threading.Thread] = []
+    index_page = app.index_page
+
+    def recorded():
+        seen.append(threading.current_thread())
+        return index_page()
+
+    app.index_page = recorded
+    server = make_server(app, port=0)
+    serving = threading.Thread(target=server.serve_forever, daemon=True)
+    serving.start()
+    try:
+        status, _ = _get(f"http://127.0.0.1:{server.server_address[1]}/")
+    finally:
+        server.shutdown()
+        server.server_close()
+    assert status == 200 and seen == [serving]
+
+
+def test_silent_connection_does_not_stall_snapshot_server(spark, clean):
+    """A connection that sends nothing (a browser's speculative
+    preconnect) gets its own thread; later requests are still served."""
+    import socket
+
+    app = DashboardApp(spark, clean)
+    with _serving(app) as base:
+        port = int(base.rsplit(":", 1)[1])
+        with socket.create_connection(("127.0.0.1", port)):
+            with urllib.request.urlopen(base + "/", timeout=30) as resp:
+                assert resp.status == 200 and "Borland" in resp.read().decode("utf-8")
 
 
 def test_app_keeps_serving_its_snapshot_after_refresh(spark, tmp_path):

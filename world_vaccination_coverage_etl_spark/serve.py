@@ -24,7 +24,9 @@ picker page from it once.  Requests then read the snapshot:
   ``window_compare`` plan), and renders functions/dashboard.py's HTML
   (KPI cards, shaded-window chart, CI bars, policy brief).
 
-On the snapshot path a request takes no lock and runs no Spark job.
+On the snapshot path a request takes no lock and runs no Spark job,
+and the server handles it in its own serving thread once the request
+has arrived (``make_server``).
 An app serves the table as it was when the app was constructed, so it
 is isolated from a refresh that overwrites the warehouse in place; a
 refreshed warehouse needs a new ``DashboardApp``.
@@ -44,6 +46,7 @@ Usage::
 from __future__ import annotations
 
 import html
+import select
 import threading
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -137,9 +140,24 @@ class DashboardApp:
         )
 
 
+# How long the serving thread waits for a new connection's request
+# before handing the connection to a thread of its own.
+READY_WAIT_S = 0.05
+
+
 def make_server(app: DashboardApp, port: int = 0) -> ThreadingHTTPServer:
     """Bind (port 0 = ephemeral) and return the server; callers drive
-    ``serve_forever``/``handle_request`` and ``server_close``."""
+    ``serve_forever``/``handle_request`` and ``server_close``.
+
+    On the snapshot path a request is a few ms of pure-Python work under
+    the GIL, so a thread per request adds only a thread start and GIL
+    hand-offs between handlers, and those make throughput depend on how
+    fast the OS wakes each thread.  The serving thread therefore handles
+    a connection itself once its request has arrived (within
+    ``READY_WAIT_S``).  A connection that stays silent that long (a
+    browser's speculative preconnect) gets its own thread, as every
+    connection does on the Spark path, so it delays the others by at
+    most ``READY_WAIT_S``."""
 
     class Handler(BaseHTTPRequestHandler):
         def do_GET(self):  # noqa: N802  (BaseHTTPRequestHandler API)
@@ -162,7 +180,17 @@ def make_server(app: DashboardApp, port: int = 0) -> ThreadingHTTPServer:
         def log_message(self, *args):  # quiet test runs
             pass
 
-    return ThreadingHTTPServer(("127.0.0.1", port), Handler)
+    class Server(ThreadingHTTPServer):
+        def process_request(self, request, client_address):
+            if app._snapshot is not None and select.select(
+                [request], [], [], READY_WAIT_S
+            )[0]:
+                self.finish_request(request, client_address)
+                self.shutdown_request(request)
+            else:
+                super().process_request(request, client_address)
+
+    return Server(("127.0.0.1", port), Handler)
 
 
 def main(argv: list[str] | None = None) -> int:
