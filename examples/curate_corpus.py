@@ -1,11 +1,13 @@
-"""Runnable demo: full training-corpus curation over the testdata.
+"""Runnable demo: the registered training-corpus curation pipeline.
 
-    python examples/curate_corpus.py [sf_dir] [out_dir]
+    python examples/curate_corpus.py sf_dir [out_dir]
 
-Composes the engine's operator families end-to-end (gates → exact
-dedup → near-dup clustering → decontamination → split → packing; see
-plans/curate.py) and prints the per-stage row counts plus the final
-split/bin summary.
+Runs ``curation_pipeline_stages`` (queries/m07_dedup.py), the pipeline
+behind the oracle-checked ``curation_pipeline`` registry query:
+language + quality gates → exact dedup (keep the min id per normalized
+text) → word-trigram Jaccard >= 0.7 near-dup pairs → survivors.  Prints
+the row count of every stage and writes the surviving doc ids as JSONL
+to ``out_dir/survivors`` (a fresh temporary directory by default).
 """
 
 from __future__ import annotations
@@ -16,48 +18,28 @@ import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from world_vaccination_coverage_etl_spark.plans.curate import (  # noqa: E402
-    curate_training_corpus,
+from world_vaccination_coverage_etl_spark.queries.m07_dedup import (  # noqa: E402
+    curation_pipeline_stages,
 )
 from world_vaccination_coverage_etl_spark.session import get_spark  # noqa: E402
-from world_vaccination_coverage_etl_spark.sources.registry import (  # noqa: E402
-    load_table,
-)
+from world_vaccination_coverage_etl_spark.sources.jsonl import write_jsonl  # noqa: E402
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    out_dir = sys.argv[2] if len(sys.argv) > 2 else tempfile.mkdtemp(
-        prefix="curated_corpus_"
-    )
+def main(argv: list[str] | None = None) -> int:
+    argv = sys.argv[1:] if argv is None else argv
+    if not argv:
+        print(__doc__, file=sys.stderr)
+        return 2
+    sf_dir = argv[0]
+    out_dir = argv[1] if len(argv) > 1 else tempfile.mkdtemp(prefix="curated_corpus_")
     spark = get_spark("curate-corpus-demo")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    bench = docs.filter(F.col("doc_id") % 50 == 0)
-    corpus = docs.filter(F.col("doc_id") % 50 != 0)
-    print(f"input: {corpus.count()} corpus docs, {bench.count()} benchmark docs")
 
-    final = curate_training_corpus(spark, corpus, bench, out_dir)
+    for name, df, _forced in curation_pipeline_stages(spark, sf_dir):
+        print(f"{name:22s} {df.count():8d} rows")
+        survivors = df
 
-    for s in ["s1_gated", "s2_exact_dedup", "s3_near_dedup",
-              "s4_decontaminated", "corpus"]:
-        n = spark.read.parquet(os.path.join(out_dir, s)).count()
-        print(f"{s:20s} {n:6d} rows")
-    print("\nsplit / packing summary:")
-    final.groupBy("split").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("ws_tokens").alias("total_tokens"),
-        (F.max("bin_idx") + 1).alias("n_bins"),
-    ).orderBy("split").show()
-    print(f"curated corpus written to {out_dir}/corpus")
-
-    # training-data handoff: partition-parallel JSONL next to the parquet
-    from world_vaccination_coverage_etl_spark.sources.jsonl import write_jsonl
-
-    jsonl_dir = os.path.join(out_dir, "corpus_jsonl")
-    write_jsonl(final.select("doc_id", "text", "split", "bin_idx"), jsonl_dir)
-    print(f"JSONL handoff written to {jsonl_dir}")
+    path = write_jsonl(survivors, os.path.join(out_dir, "survivors"))
+    print(f"surviving doc ids written to {path}")
     return 0
 
 

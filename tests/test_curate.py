@@ -1,98 +1,88 @@
-"""End-to-end curation pipeline test (plans/curate.py)."""
+"""The registered curation pipeline (``curation_pipeline_stages`` in
+queries/m07_dedup.py) and the example that runs it."""
 
 from __future__ import annotations
 
 import os
+import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-from world_vaccination_coverage_etl_spark.plans.curate import curate_training_corpus
-from world_vaccination_coverage_etl_spark.sources.registry import load_table
+from world_vaccination_coverage_etl_spark.operators.dedup import normalized_text
+from world_vaccination_coverage_etl_spark.queries.m07_dedup import (
+    _docs_self_union,
+    curation_pipeline_stages,
+)
+
+STAGES = [
+    "gate_lang_quality",
+    "exact_dedup_shingle",
+    "near_dup_pairs",
+    "survivors_anti_join",
+]
 
 
 @pytest.fixture(scope="module")
-def curated(spark, sf_small, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("curated"))
-    docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    bench = docs.filter(F.col("doc_id") % 50 == 0)
-    corpus = docs.filter(F.col("doc_id") % 50 != 0)
-    final = curate_training_corpus(
-        spark, corpus, bench, out,
-        lang_whitelist=("en",), min_quality=0.2,
-        near_dup_threshold=0.8, train_frac=0.9, pack_capacity=256,
-    )
-    return final, corpus, bench, out
-
-
-def test_pipeline_produces_nonempty_training_corpus(curated):
-    final, corpus, bench, out = curated
-    n = final.count()
-    assert 0 < n <= corpus.count()
-    assert set(final.columns) == {
-        "doc_id", "text", "lang", "ws_tokens", "split", "bin_idx"
+def stages(spark, sf_small):
+    return {
+        name: (df, forced)
+        for name, df, forced in curation_pipeline_stages(spark, sf_small)
     }
 
 
-def test_stages_materialized_and_monotone(curated):
-    final, corpus, bench, out = curated
-    from pyspark.sql import SparkSession
+def test_pipeline_produces_nonempty_training_corpus(stages):
+    assert list(stages) == STAGES
+    survivors, _ = stages["survivors_anti_join"]
+    assert survivors.columns == ["doc_id"]
+    n = survivors.count()
+    assert 0 < n <= stages["gate_lang_quality"][0].count()
 
-    spark = SparkSession.getActiveSession()
-    sizes = {}
-    for s in ["s1_gated", "s2_exact_dedup", "s3_near_dedup",
-              "s4_decontaminated", "corpus"]:
-        path = os.path.join(out, s)
-        assert os.path.isdir(path), f"stage {s} not materialized"
-        sizes[s] = spark.read.parquet(path).count()
+
+def test_stages_materialized_and_monotone(stages):
+    # the forced stage was written out and is read back from its own
+    # files, not recomputed from the documents table
+    uniq, forced = stages["exact_dedup_shingle"]
+    files = uniq.inputFiles()
+    assert forced and files
+    assert not any("documents" in f for f in files)
+    n ={name: df.count() for name, (df, _) in stages.items()}
     # each destructive stage only removes rows
-    assert sizes["s2_exact_dedup"] <= sizes["s1_gated"]
-    assert sizes["s3_near_dedup"] <= sizes["s2_exact_dedup"]
-    assert sizes["s4_decontaminated"] <= sizes["s3_near_dedup"]
-    assert sizes["corpus"] == sizes["s4_decontaminated"]
+    assert n["exact_dedup_shingle"] <= n["gate_lang_quality"]
+    assert n["survivors_anti_join"] <= n["exact_dedup_shingle"]
+    dropped = stages["near_dup_pairs"][0].select("id_b").distinct().count()
+    assert n["survivors_anti_join"] == n["exact_dedup_shingle"] - dropped
 
 
-def test_no_exact_duplicates_survive(curated):
-    final, *_ = curated
-    from world_vaccination_coverage_etl_spark.operators.dedup import normalized_text
-
+def test_no_exact_duplicates_survive(spark, sf_small, stages):
+    texts = _docs_self_union(spark, sf_small).select(
+        "doc_id", normalized_text(F.col("text")).alias("norm")
+    )
+    # the input holds every text twice, so the check is not vacuous
+    assert texts.groupBy("norm").count().filter("count > 1").count() > 0
+    survivors, _ = stages["survivors_anti_join"]
     dups = (
-        final.select(normalized_text(F.col("text")).alias("norm"))
+        survivors.join(texts, "doc_id")
         .groupBy("norm").count().filter("count > 1").count()
     )
     assert dups == 0
 
 
-def test_no_contaminated_docs_survive(curated):
-    final, corpus, bench, out = curated
-    from world_vaccination_coverage_etl_spark.operators.dedup import (
-        ngram_contamination_pairs,
+def test_curate_corpus_example_runs(spark, sf_small, stages, tmp_path,
+                                    monkeypatch, capsys):
+    examples = os.path.join(os.path.dirname(os.path.dirname(__file__)), "examples")
+    monkeypatch.syspath_prepend(examples)
+    # the example builds its session with get_spark(), which reuses this
+    # one; pin the core count so it leaves the shuffle partitions as is
+    monkeypatch.setenv(
+        "SPARK_GRAFT_CPUS", spark.conf.get("spark.sql.shuffle.partitions")
     )
+    sys.modules.pop("curate_corpus", None)
+    import curate_corpus
 
-    leaked = ngram_contamination_pairs(
-        final.select("doc_id", "text"), bench, n=5
-    ).count()
-    assert leaked == 0
-
-
-def test_split_and_packing_contract(curated):
-    final, *_ = curated
-    splits = {r["split"] for r in final.select("split").distinct().collect()}
-    assert splits <= {"train", "val"} and "train" in splits
-    # packing: within each split, walking ids ascending, bin_idx is
-    # non-decreasing and bins respect capacity except single overlong docs
-    rows = final.select("split", "doc_id", "ws_tokens", "bin_idx").collect()
-    by_split: dict[str, list] = {}
-    for r in rows:
-        by_split.setdefault(r["split"], []).append(r)
-    for split, rs in by_split.items():
-        rs.sort(key=lambda r: r["doc_id"])
-        fill: dict[int, int] = {}
-        last_bin = 0
-        for r in rs:
-            assert r["bin_idx"] >= last_bin
-            last_bin = r["bin_idx"]
-            fill[r["bin_idx"]] = fill.get(r["bin_idx"], 0) + r["ws_tokens"]
-        for b, tot in fill.items():
-            members = [r for r in rs if r["bin_idx"] == b]
-            assert tot <= 256 or len(members) == 1
+    assert curate_corpus.main([sf_small, str(tmp_path)]) == 0
+    out = capsys.readouterr().out
+    for name in STAGES:
+        assert name in out
+    written = spark.read.json(str(tmp_path / "survivors"))
+    assert written.count() == stages["survivors_anti_join"][0].count()

@@ -63,3 +63,19 @@ def test_symmetry_and_edges():
     assert float(t_ppf(0.5, 13)) == 0.0
     assert np.isnan(t_ppf(0.975, 0))
     assert np.isnan(t_cdf(1.0, np.nan))
+
+
+def test_scalar_and_vector_sf_agree_on_both_branches():
+    # betainc_reg evaluates each element on only one continued-fraction
+    # branch; a vector call must give what per-element scalar calls give
+    ts = np.array([-30.0, -4.0, -1.5, -0.2, 0.0, 0.3, 1.0, 2.2, 5.0, 30.0])
+    dfs = np.array([0.5, 1.0, 2.0, 3.5, 9.0, 30.0, 200.0])
+    tt, dd = (g.ravel() for g in np.meshgrid(ts, dfs))
+    # I_x(df/2, 1/2) with x = df/(df+t^2) takes the direct branch iff
+    # x < (a+1)/(a+b+2); the grid must exercise both
+    a, x = dd / 2.0, dd / (dd + tt * tt)
+    direct = x < (a + 1.0) / (a + 0.5 + 2.0)
+    assert direct.any() and (~direct).any()
+    vec = t_sf(tt, dd)
+    for t, df, v in zip(tt, dd, vec):
+        assert float(t_sf(float(t), float(df))) == pytest.approx(v, rel=1e-12)

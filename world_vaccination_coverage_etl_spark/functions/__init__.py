@@ -1,21 +1,16 @@
-from .tdist import t_cdf, t_ppf, t_sf, betainc_reg
+from .tdist import t_ppf, t_sf
 from .stats import (
     welch_t_columns,
     mean_ci_columns,
     two_sided_p_udf,
-    t_crit_udf,
 )
-from .flags import country_to_flag, country_flag_udf
+from .flags import country_flag_udf
 
 __all__ = [
-    "t_cdf",
     "t_ppf",
     "t_sf",
-    "betainc_reg",
     "welch_t_columns",
     "mean_ci_columns",
     "two_sided_p_udf",
-    "t_crit_udf",
-    "country_to_flag",
     "country_flag_udf",
 ]

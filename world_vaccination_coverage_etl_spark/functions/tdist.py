@@ -66,22 +66,25 @@ def betainc_reg(a, b, x):
     b = np.asarray(b, dtype=np.float64)
     x = np.asarray(x, dtype=np.float64)
     a, b, x = np.broadcast_arrays(a, b, x)
-    out = np.empty_like(x)
 
     ln_beta = _lgamma(a + b) - _lgamma(a) - _lgamma(b)
     # front factor x^a (1-x)^b / (a * B(a,b)); guard log(0)
     with np.errstate(divide="ignore", invalid="ignore"):
         front = np.exp(ln_beta + a * np.log(x) + b * np.log1p(-x))
 
-    use_direct = x < (a + 1.0) / (a + b + 2.0)
-    # direct expansion region
-    xd = np.where(use_direct, x, 0.5)
-    direct = front / a * _betacf(a, b, xd)
-    # symmetric region via I_x(a,b) = 1 - I_{1-x}(b,a)
-    xs = np.where(~use_direct, 1.0 - x, 0.5)
-    sym = 1.0 - front / b * _betacf(b, a, xs)
+    # each element runs the continued fraction once, on its own branch:
+    # the direct expansion, or the symmetric region via
+    # I_x(a,b) = 1 - I_{1-x}(b,a); an empty branch is skipped
+    direct = x < (a + 1.0) / (a + b + 2.0)
+    sym = ~direct
+    out = np.empty(x.shape, dtype=np.float64)
+    if direct.any():
+        out[direct] = (
+            front[direct] / a[direct] * _betacf(a[direct], b[direct], x[direct])
+        )
+    if sym.any():
+        out[sym] = 1.0 - front[sym] / b[sym] * _betacf(b[sym], a[sym], 1.0 - x[sym])
 
-    out = np.where(use_direct, direct, sym)
     out = np.where(x <= 0.0, 0.0, out)
     out = np.where(x >= 1.0, 1.0, out)
     return out
@@ -108,19 +111,6 @@ def t_cdf(t, df):
 def t_sf(t, df):
     """Survival function P(T > t)."""
     return 1.0 - t_cdf(t, df)
-
-
-def t_pdf(x, df):
-    """Density of Student's t, vectorized (used as the Newton derivative)."""
-    x = np.asarray(x, dtype=np.float64)
-    df = np.asarray(df, dtype=np.float64)
-    x, df = np.broadcast_arrays(x, df)
-    return np.exp(
-        _lgamma((df + 1.0) / 2.0)
-        - _lgamma(df / 2.0)
-        - 0.5 * np.log(df * np.pi)
-        - (df + 1.0) / 2.0 * np.log1p(x * x / df)
-    )
 
 
 # Acklam's rational approximation to the standard-normal quantile

@@ -3,7 +3,6 @@ from .dedup import (
     exact_dedup,
     exact_dedup_pairs,
     minhash_near_dup_pairs,
-    simhash_near_dup_pairs,
     ngram_jaccard_pairs,
     embedding_cosine_dup_pairs,
     substring_dup_spans,
@@ -21,7 +20,6 @@ from .text import (
     word_frequencies,
 )
 from .multimodal import (
-    MULTIMODAL_META_SCHEMA,
     attach_binary_metadata,
     decode_image_batch,
     extract_features,
@@ -32,7 +30,6 @@ __all__ = [
     "exact_dedup",
     "exact_dedup_pairs",
     "minhash_near_dup_pairs",
-    "simhash_near_dup_pairs",
     "ngram_jaccard_pairs",
     "embedding_cosine_dup_pairs",
     "substring_dup_spans",
@@ -44,7 +41,6 @@ __all__ = [
     "with_language_id",
     "with_fingerprint",
     "word_frequencies",
-    "MULTIMODAL_META_SCHEMA",
     "attach_binary_metadata",
     "decode_image_batch",
     "extract_features",

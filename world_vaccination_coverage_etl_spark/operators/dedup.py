@@ -1,16 +1,16 @@
 """Deduplication operators for large-scale corpus curation.
 
-Seven families, all designed shuffle-lean for the 100 TB posture:
+Six families, all designed shuffle-lean for the 100 TB posture:
 
 - exact:      hash-groupBy on normalized content (one shuffle);
 - MinHash:    shingle → per-row minhash signature (zero shuffle) →
               LSH banding → bucket join for candidates → row-local
               Jaccard verify;
-- SimHash (Arrow): vectorized FNV Pandas-UDF signature → 16-bit chunk
-              blocking → popcount (bit_count) verify — the fast path;
-- SimHash (portable): md5-prefix signature in pure JVM expressions,
-              bit-identical in ANSI SQL, so the full pair set is
-              oracle-certifiable end-to-end;
+- SimHash:    md5-prefix token-hash signature (Arrow kernel,
+              bit-identical to a pure-JVM expression flavor and to
+              ANSI SQL, so the full pair set is oracle-certifiable
+              end-to-end) → combo-block blocking → popcount
+              (bit_count) verify;
 - n-gram Jaccard: row-local n-gram sets → blocked self-join → row-local
               intersect/union arithmetic;
 - embedding:  multi-table sign-LSH blocking (union of per-table bucket
@@ -305,7 +305,6 @@ def minhash_near_dup_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    shingle_k: int = 3,
     threshold: float = 0.7,
     staging_dir: str | None = None,
 ) -> DataFrame:
@@ -326,40 +325,22 @@ def minhash_near_dup_pairs(
     Jaccard j is caught with prob 1-(1-j^4)^16 (≥ 98.8% at j=0.7, ≥
     1-1e-16 at j=0.97).
     """
-    if shingle_k == 3:
-        # fused single-pass kernel (bands + shingles; see
-        # _minhash_bands_and_shingles): one tokenize+shingle pass, one
-        # staged table feeding all four consumers below
-        both = _stage(
-            df.select(
-                F.col(id_col),
-                _minhash_bands_and_shingles(F.col(text_col)).alias("bs"),
-            ).select(id_col, "bs.bands", "bs.shingles"),
-            staging_dir,
-            "minhash_bands_shingles",
-        )
-        banded = both.select(
+    # fused single-pass kernel (bands + shingles; see
+    # _minhash_bands_and_shingles): one tokenize+shingle pass, one
+    # staged table feeding all four consumers below
+    both = _stage(
+        df.select(
             F.col(id_col),
-            F.posexplode("bands").alias("band_idx", "band_hash"),
-        )
-        sh = both.select(F.col(id_col), "shingles").filter(
-            F.size("shingles") > 0
-        )
-    else:
-        banded = df.select(
-            F.col(id_col), F.posexplode(_minhash_band_hashes(F.col(text_col))).alias(
-                "band_idx", "band_hash"
-            )
-        )
-        # lineage cuts (see _stage): `banded` feeds both sides of the
-        # candidate self-join and `sh` both id-keyed re-attach joins —
-        # without the cut each Arrow kernel runs twice
-        banded = _stage(banded, staging_dir, "minhash_banded")
-
-        sh = df.select(
-            F.col(id_col), shingles_udf(shingle_k)(F.col(text_col)).alias("shingles")
-        ).filter(F.size("shingles") > 0)
-        sh = _stage(sh, staging_dir, "minhash_shingles")
+            _minhash_bands_and_shingles(F.col(text_col)).alias("bs"),
+        ).select(id_col, "bs.bands", "bs.shingles"),
+        staging_dir,
+        "minhash_bands_shingles",
+    )
+    banded = both.select(
+        F.col(id_col),
+        F.posexplode("bands").alias("band_idx", "band_hash"),
+    )
+    sh = both.select(F.col(id_col), "shingles").filter(F.size("shingles") > 0)
 
     cand_ids = (
         banded.alias("a")
@@ -419,7 +400,6 @@ def minhash_screen_new_batch(
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
-    shingle_k: int = 3,
     threshold: float = 0.7,
     staging_dir: str | None = None,
 ) -> DataFrame:
@@ -450,39 +430,24 @@ def minhash_screen_new_batch(
     per-batch screen never re-shuffles the corpus-sized side
     (plan-pinned in ``tests/test_warehouse_bucketing.py``).
     """
-    if shingle_k == 3:
-        # fused single-pass kernel over the batch (r14; see
-        # _minhash_bands_and_shingles): band signatures AND the verify
-        # shingles in one tokenize+shingle pass instead of two
-        both = _stage(
-            new_df.select(
-                F.col(id_col),
-                _minhash_bands_and_shingles(F.col(text_col)).alias("bs"),
-            ).select(id_col, "bs.bands", "bs.shingles"),
-            staging_dir,
-            "incr_new_bands_shingles",
-        )
-        new_bands = both.select(
+    # fused single-pass kernel over the batch (see
+    # _minhash_bands_and_shingles): band signatures AND the verify
+    # shingles in one tokenize+shingle pass instead of two
+    both = _stage(
+        new_df.select(
             F.col(id_col),
-            F.posexplode("bands").alias("band_idx", "band_hash"),
-        )
-        new_sh = both.select(
-            F.col(id_col).alias("new_id"), F.col("shingles").alias("sh_n")
-        ).filter(F.size("sh_n") > 0)
-    else:
-        new_bands = _stage(
-            minhash_band_signatures(new_df, text_col, id_col),
-            staging_dir,
-            "incr_new_bands",
-        )
-        new_sh = _stage(
-            new_df.select(
-                F.col(id_col).alias("new_id"),
-                shingles_udf(shingle_k)(F.col(text_col)).alias("sh_n"),
-            ).filter(F.size("sh_n") > 0),
-            staging_dir,
-            "incr_new_shingles",
-        )
+            _minhash_bands_and_shingles(F.col(text_col)).alias("bs"),
+        ).select(id_col, "bs.bands", "bs.shingles"),
+        staging_dir,
+        "incr_new_bands_shingles",
+    )
+    new_bands = both.select(
+        F.col(id_col),
+        F.posexplode("bands").alias("band_idx", "band_hash"),
+    )
+    new_sh = both.select(
+        F.col(id_col).alias("new_id"), F.col("shingles").alias("sh_n")
+    ).filter(F.size("sh_n") > 0)
     cand = (
         new_bands.alias("n")
         .join(
@@ -499,7 +464,7 @@ def minhash_screen_new_batch(
     cand_base_ids = cand.select(F.col("base_id").alias(id_col)).distinct()
     base_sh = base_df.join(cand_base_ids, id_col, "left_semi").select(
         F.col(id_col).alias("base_id"),
-        shingles_udf(shingle_k)(F.col(text_col)).alias("sh_b"),
+        shingles_udf(3)(F.col(text_col)).alias("sh_b"),
     )
     return (
         cand.join(new_sh, "new_id")
@@ -927,45 +892,7 @@ def _jaccard_pairs_prefix(
 
 
 # --------------------------------------------------------------------------
-# SimHash
-
-
-# maximal runs of alphanumeric characters, excluding underscore —
-# the regex form of splitting on ``not c.isalnum()`` (the reference
-# kernel below does exactly that char-by-char)
-_SIMHASH_TOKEN_RE = re.compile(r"[^\W_]+", re.UNICODE)
-
-
-def _simhash64_ref(texts) -> list[int]:
-    """Reference SimHash kernel (r3 implementation, per-token Python
-    FNV loop).  Kept as the correctness oracle for the vectorized
-    kernel below — tests assert bit-identical signatures."""
-    import numpy as np
-
-    def fnv1a64(token: str) -> int:
-        h = 0xCBF29CE484222325
-        for byte in token.encode("utf-8"):
-            h = ((h ^ byte) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-        return h
-
-    shifts = np.arange(64, dtype=np.uint64)
-    out = []
-    for text in texts:
-        if not text:
-            out.append(0)
-            continue
-        tokens = [t for t in "".join(
-            c if c.isalnum() else " " for c in text.lower()
-        ).split() if t]
-        if not tokens:
-            out.append(0)
-            continue
-        hs = np.array([fnv1a64(tok) for tok in tokens], dtype=np.uint64)
-        bits = (hs[:, None] >> shifts[None, :]) & np.uint64(1)
-        acc = np.where(bits == 1, 1, -1).sum(axis=0)
-        sig = int(np.packbits(acc > 0, bitorder="little").view(np.uint64)[0])
-        out.append(sig - (1 << 64) if sig >= (1 << 63) else sig)
-    return out
+# SimHash token-vote kernels (used by the md5 SimHash kernel below)
 
 
 def _batch_vocab(toks_per_doc):
@@ -986,7 +913,7 @@ def _batch_vocab(toks_per_doc):
 
 
 def _accumulate_simhash(h, tok_idx, lens, n):
-    """±1 bit-vote accumulation shared by the SimHash kernels.
+    """±1 bit-vote accumulation of the md5 SimHash kernel.
 
     ``h``: uint64 token hash per vocabulary entry; signature bit b of a
     doc is 1 iff the sum over its token OCCURRENCES of (hash bit b set
@@ -1046,99 +973,6 @@ def _accumulate_simhash(h, tok_idx, lens, n):
                 out[i:j][nz] = sig.view(np.int64)
             i = j
     return out
-
-
-@F.pandas_udf(T.LongType())
-def _simhash64(texts: pd.Series) -> pd.Series:
-    """64-bit SimHash over word tokens — fully vectorized Arrow kernel.
-
-    Same semantics as ``_simhash64_ref`` (bit-identical, pytest-pinned):
-    deterministic FNV-1a token hashes, signature bit b is 1 iff the sum
-    over token OCCURRENCES of (bit b set ? +1 : -1) is positive.
-
-    Vectorization: tokens come from one C-speed regex scan per doc; the
-    batch vocabulary is FNV-hashed as a numpy byte matrix (one uint64
-    op per byte POSITION, not per byte); per-doc ±1 accumulation is a
-    single ``add.reduceat`` over the occurrence matrix.  Python-level
-    work drops from O(total chars) to O(docs + unique tokens).
-    """
-    import numpy as np
-
-    toks_per_doc = [
-        _SIMHASH_TOKEN_RE.findall(t.lower()) if t else [] for t in texts
-    ]
-    vocab, tok_idx, lens = _batch_vocab(toks_per_doc)
-    h = np.empty(0, dtype=np.uint64)
-    if vocab:
-        enc = [w.encode("utf-8") for w in vocab]
-        maxlen = max(len(b) for b in enc)
-        pad = b"".join(b.ljust(maxlen, b"\0") for b in enc)
-        byte_mat = np.frombuffer(pad, dtype=np.uint8).reshape(len(enc), maxlen)
-        blen = np.array([len(b) for b in enc])
-        h = np.full(len(enc), 0xCBF29CE484222325, dtype=np.uint64)
-        prime = np.uint64(0x100000001B3)
-        for pos in range(maxlen):
-            live = blen > pos
-            h[live] = (h[live] ^ byte_mat[live, pos].astype(np.uint64)) * prime
-    return pd.Series(_accumulate_simhash(h, tok_idx, lens, len(texts)))
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    staging_dir: str | None = None,
-) -> DataFrame:
-    """Near-dup pairs with SimHash hamming distance <= ``max_hamming``.
-
-    Blocking: the 64-bit signature splits into four 16-bit chunks; by
-    pigeonhole, any pair within hamming distance 3 shares at least one
-    chunk exactly.  Candidates join on (chunk_idx, chunk_value); verify
-    is a JVM-side ``bit_count(xor)``.
-    """
-    signed = df.select(F.col(id_col), _simhash64(F.col(text_col)).alias("sig"))
-    # cut the lineage so the signature kernel runs ONCE: the blocking
-    # self-join would otherwise re-evaluate the Arrow UDF on every join
-    # side (observed 4 ArrowEvalPython nodes in the executed plan).
-    signed = _stage(signed, staging_dir, "simhash_signed")
-    chunks = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("chunk_idx"),
-                F.shiftrightunsigned("sig", 16 * i).bitwiseAND(F.lit(0xFFFF)).alias(
-                    "chunk_val"
-                ),
-            )
-            for i in range(4)
-        ]
-    )
-    blocked = signed.select(id_col, "sig", F.explode(chunks).alias("c")).select(
-        id_col, "sig", "c.chunk_idx", "c.chunk_val"
-    )
-    a, b = blocked.alias("a"), blocked.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return (
-        cand.withColumn(
-            "hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1295,7 +1129,7 @@ def substring_dup_spans(
 
 
 # --------------------------------------------------------------------------
-# SimHash, engine-portable flavor (md5 token hash, pure JVM expressions)
+# SimHash (md5 token hash): pure JVM expressions and an Arrow kernel
 
 SIMHASH_MD5_TOKEN_SPLIT = "[^a-z0-9]+"
 
@@ -1311,8 +1145,7 @@ def simhash_md5_signatures(
     the sum over token occurrences of (bit b set ? +1 : -1) is positive.
     Every step has a bit-identical ANSI-SQL spelling (DuckDB:
     ``('0x'||substr(md5(tok),...))::BIGINT``), so the full near-dup pair
-    set is oracle-checkable — unlike the FNV kernel flavor above, whose
-    signature only exists inside the Arrow UDF.
+    set is oracle-checkable.
 
     Scale shape: explode(tokens) → groupBy(id) with 64 conditional sums.
     All whole-stage-codegen JVM expressions with map-side partial
@@ -1450,7 +1283,6 @@ def simhash_md5_near_dup_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     staging_dir: str | None = None,
-    signature_impl: str = "kernel",
 ) -> DataFrame:
     """Near-dup pairs under the engine-portable md5 SimHash.
 
@@ -1478,11 +1310,9 @@ def simhash_md5_near_dup_pairs(
     The combo pigeonhole requires ``max_hamming <= 3`` (more edits
     could touch 4+ blocks); larger thresholds raise.
 
-    ``signature_impl``: ``"kernel"`` (default) computes signatures via
-    the Arrow md5 kernel (bit-identical, ~1.5 s less fresh-plan
-    latency); ``"expr"`` uses the pure-JVM 65-aggregate expression
-    (zero Python anywhere in the plan — the engine-portability
-    reference the kernel is parity-pinned against).
+    Signatures come from the Arrow md5 kernel
+    (``simhash_md5_signatures_kernel``), which is parity-pinned against
+    the pure-JVM expression flavor and plans ~1.5 s faster.
     """
     if max_hamming > 3:
         raise ValueError(
@@ -1491,13 +1321,9 @@ def simhash_md5_near_dup_pairs(
         )
     from itertools import combinations
 
-    make_sigs = {
-        "kernel": simhash_md5_signatures_kernel,
-        "expr": simhash_md5_signatures,
-    }[signature_impl]
-    signed = make_sigs(df, text_col, id_col)
-    # one narrow materialization so the signature agg runs once, not
-    # once per blocking-join side (same rationale as the FNV flavor)
+    signed = simhash_md5_signatures_kernel(df, text_col, id_col)
+    # one narrow materialization so the signature kernel runs once, not
+    # once per blocking-join side
     signed = _stage(signed, staging_dir, "simhash_md5_signed")
     g = signed.groupBy("sig_hi", "sig_lo").agg(F.min(id_col).alias("gid"))
     members = signed.join(g, on=["sig_hi", "sig_lo"]).select(id_col, "gid")

@@ -298,13 +298,6 @@ class _BitReader:
         self._load(nxt)
 
 
-def _extend(v: int, size: int) -> int:
-    # T.81 F.2.2.1: map a `size`-bit magnitude to its signed value
-    if size == 0:
-        return 0
-    return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
-
-
 def _category(v: int) -> int:
     size = 0
     a = -v if v < 0 else v

@@ -697,11 +697,10 @@ def _simhash_md5_oracle_sql() -> str:
     "hashes via the Arrow signature kernel (operators/dedup.py "
     "_simhash_md5_kernel — bit-identical to the engine-portable 65-aggregate JVM "
     "expression flavor, parity-pinned in tests/test_dedup.py, and ~1.5 s less "
-    "fresh-plan latency), 16-bit pigeonhole blocking + bit_count verify; the "
-    "oracle recomputes signatures in SQL and takes the exact O(n^2) pair set, so "
-    "the hash compare certifies signature math AND proves the blocking misses "
-    "nothing. The FNV-kernel flavor (simhash_near_dup_pairs) stays available, "
-    "bit-pinned by tests/test_dedup.py",
+    "fresh-plan latency), C(6,3) block-combo pigeonhole blocking + bit_count "
+    "verify; the oracle recomputes signatures in SQL and takes the exact O(n^2) "
+    "pair set, so the hash compare certifies signature math AND proves the "
+    "blocking misses nothing",
 )
 def q_simhash_near_dup(spark, sf_dir):
     # self-union: identical texts have identical signatures (hamming 0),

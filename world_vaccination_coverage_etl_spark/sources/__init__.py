@@ -1,11 +1,9 @@
-from .registry import load_table, register_star_views
+from .registry import load_table
 from .csv_source import read_wide_csv
-from .warehouse import read_warehouse_table, write_warehouse_table
+from .warehouse import write_warehouse_table
 
 __all__ = [
     "load_table",
-    "register_star_views",
     "read_wide_csv",
-    "read_warehouse_table",
     "write_warehouse_table",
 ]

@@ -172,12 +172,6 @@ class JsonlCommitMessage(WriterCommitMessage):
         self.n_rows = n_rows
 
 
-def _to_jsonable(v):
-    if v is None or isinstance(v, (str, int, float, bool)):
-        return v
-    return str(v)  # date/datetime/decimal → ISO-ish text
-
-
 def _write_batches_jsonl(fh, fields, batches) -> int:
     """Serialize Arrow RecordBatches to sorted-key JSONL lines.
 

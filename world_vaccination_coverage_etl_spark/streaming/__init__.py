@@ -2,7 +2,6 @@ from .refresh import streaming_refresh_available_now
 from .event_windows import (
     tumbling_event_counts,
     sliding_event_counts,
-    streaming_tumbling_counts,
     sessionize,
 )
 
@@ -10,6 +9,5 @@ __all__ = [
     "streaming_refresh_available_now",
     "tumbling_event_counts",
     "sliding_event_counts",
-    "streaming_tumbling_counts",
     "sessionize",
 ]

@@ -49,28 +49,6 @@ def sliding_event_counts(
     )
 
 
-def streaming_tumbling_counts(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    duration: str = "1 day",
-    watermark: str = "1 day",
-    query_name: str = "event_counts",
-):
-    """Streaming flavor: parquet file source → watermark → tumbling agg
-    → memory sink (for tests; swap the sink for production).  Returns
-    the started StreamingQuery."""
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    agg = tumbling_event_counts(stream.withWatermark("ts", watermark), duration)
-    return (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def streaming_tumbling_to_files(
     spark: SparkSession,
     source_dir: str,
@@ -85,7 +63,7 @@ def streaming_tumbling_to_files(
     """Scale-safe streaming flavor: file source → watermark → tumbling
     agg → **append-mode parquet sink**.
 
-    Unlike the complete-mode memory sink (a correctness harness that
+    Unlike a complete-mode memory sink (a correctness harness that
     materializes the whole aggregate on the driver every trigger), this
     is the shape that survives production scale: append mode emits each
     window exactly once, when the watermark passes its end — so state
