@@ -586,50 +586,6 @@ def test_minhash_screen_empty_batch(spark):
     assert out.count() == 0
 
 
-def test_minhash_index_accept_two_batch_cycle(spark):
-    """Full ingest cycle: batch 1 screens vs the base index, its
-    keepers' signatures are appended, and batch 2 then catches a
-    near-dup of a BATCH-1 keeper — consecutive crawls dedup against
-    each other's accepted docs, not just the original corpus."""
-    from world_vaccination_coverage_etl_spark.operators.dedup import (
-        minhash_band_signatures,
-        minhash_index_accept,
-        minhash_screen_new_batch,
-    )
-
-    base = spark.createDataFrame(
-        [(0, "the quick brown fox jumps over the lazy dog near the river bank")],
-        "doc_id long, text string",
-    )
-    b1 = spark.createDataFrame(
-        [
-            # near-dup of base 0 -> dropped
-            (10, "the quick brown fox jumps over the lazy dog near the river edge"),
-            # novel -> accepted into the index
-            (11, "a totally novel document about distributed query planning today"),
-        ],
-        "doc_id long, text string",
-    )
-    idx = minhash_band_signatures(base)
-    p1 = minhash_screen_new_batch(idx, base, b1, threshold=0.7).localCheckpoint()
-    assert {(r.new_id, r.base_id) for r in p1.collect()} == {(10, 0)}
-
-    idx2 = minhash_index_accept(idx, b1, p1).localCheckpoint()
-    # index now holds base 0 + keeper 11 (dropped 10 is absent)
-    assert set(r.doc_id for r in idx2.select("doc_id").distinct().collect()) == {0, 11}
-
-    b2 = spark.createDataFrame(
-        [
-            # near-dup of batch-1 KEEPER 11 (last token changed)
-            (20, "a totally novel document about distributed query planning tonight"),
-        ],
-        "doc_id long, text string",
-    )
-    corpus2 = base.unionByName(b1.join(p1.select(F.col("new_id").alias("doc_id")).distinct(), "doc_id", "left_anti"))
-    p2 = minhash_screen_new_batch(idx2, corpus2, b2, threshold=0.6)
-    assert {(r.new_id, r.base_id) for r in p2.collect()} == {(20, 11)}
-
-
 def test_embedding_screen_new_batch_vs_base_index(spark):
     """Vector-space incremental screen: an exact re-crawl collides in
     every LSH table and is caught with cosine 1.0; an orthogonal/novel

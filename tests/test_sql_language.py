@@ -12,14 +12,14 @@ from __future__ import annotations
 
 import pytest
 
-from world_vaccination_coverage_etl_spark.sources.registry import (
-    register_star_views,
-)
+from world_vaccination_coverage_etl_spark.schemas import STAR_TABLES
+from world_vaccination_coverage_etl_spark.sources.registry import load_table
 
 
 @pytest.fixture(scope="module", autouse=True)
 def views(spark, sf_small):
-    register_star_views(spark, sf_small)
+    for name in STAR_TABLES:
+        load_table(spark, sf_small, name).createOrReplaceTempView(name)
 
 
 def test_sql_udf_runs_jvm_side(spark):

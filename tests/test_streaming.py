@@ -7,7 +7,7 @@ import datetime as dt
 from pyspark.sql import types as T
 
 from world_vaccination_coverage_etl_spark.schemas import TABLE_CLEAN
-from world_vaccination_coverage_etl_spark.sources.warehouse import read_warehouse_table
+from world_vaccination_coverage_etl_spark.sources.warehouse import table_path
 from world_vaccination_coverage_etl_spark.streaming.event_windows import (
     sessionize,
     sliding_event_counts,
@@ -36,7 +36,7 @@ def test_streaming_refresh_available_now(spark, tmp_path):
     streaming_refresh_available_now(
         spark, str(staging), str(warehouse), str(ckpt), WIDE_SCHEMA
     )
-    out1 = read_warehouse_table(spark, str(warehouse), TABLE_CLEAN).collect()
+    out1 = spark.read.parquet(table_path(str(warehouse), TABLE_CLEAN)).collect()
     assert {(r.country, r.year) for r in out1} == {("Aland", 1990)}
 
     # a second file arrives; AvailableNow processes only the delta, and
@@ -45,7 +45,7 @@ def test_streaming_refresh_available_now(spark, tmp_path):
     streaming_refresh_available_now(
         spark, str(staging), str(warehouse), str(ckpt), WIDE_SCHEMA
     )
-    out2 = read_warehouse_table(spark, str(warehouse), TABLE_CLEAN).collect()
+    out2 = spark.read.parquet(table_path(str(warehouse), TABLE_CLEAN)).collect()
     assert {(r.country, r.year) for r in out2} == {("Borland", 1991)}
 
 

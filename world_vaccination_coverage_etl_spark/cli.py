@@ -2,8 +2,9 @@
 
 Spark-native equivalent of the reference's ``python etl_pipeline.py``
 (SURVEY.md §3 EP1; reference etl_pipeline.py:184-195): always run the
-ETL, then — when ``--country``/``--antigen`` are given — collect that
-series once, compute the windowed comparison from the collected rows
+ETL and print its counts from the run manifest, then — when
+``--country``/``--antigen`` are given — collect that series once,
+compute the windowed comparison from the collected rows
 (functions/stats.py ``series_window_stats``), print the analysis
 block, and save the raw-series CSV + chart + PDF-report artifacts
 (functions/chart.py — SVG here, PNG when matplotlib is importable;
@@ -32,7 +33,7 @@ from .functions.narrative import policy_brief
 from .functions.report import save_pdf_report
 from .functions.stats import series_window_stats
 from .plans.analytics import coverage_series
-from .plans.pipeline import run_etl
+from .plans.pipeline import read_run_manifest, run_etl
 from .session import get_spark
 from .sources.csv_source import stage_csv
 from .sources.sinks import sanitize_filename, write_csv
@@ -167,7 +168,9 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("world_vaccination_coverage_etl_cli")
 
     clean = run_etl(spark, stage_csv(args.csv), args.warehouse)
-    print(f"ETL complete: {clean.count()} clean rows -> {args.warehouse}")
+    counts = read_run_manifest(args.warehouse)["counts"]
+    print(f"ETL complete: {counts['rows_written']} clean rows -> {args.warehouse}")
+    print("  " + ", ".join(f"{k}={v}" for k, v in counts.items()))
 
     if args.country and args.antigen:
         ok = run_analysis(

@@ -409,7 +409,7 @@ def minhash_screen_new_batch(
 
     The continuous-crawl step: ``index_df`` is the MATERIALIZED
     ``minhash_band_signatures`` table of the existing corpus (built
-    once, appended to as batches are accepted), so per-batch cost is
+    once, appended to as the corpus grows), so per-batch cost is
     batch-sized, never corpus-sized — batch signatures (one Arrow
     kernel over the batch), one candidate join against the index on
     the short (band_idx, band_hash) key, then exact shingle-Jaccard
@@ -472,31 +472,6 @@ def minhash_screen_new_batch(
         .withColumn("jaccard", jaccard(F.col("sh_n"), F.col("sh_b")))
         .filter(F.col("jaccard") >= threshold)
         .select("new_id", "base_id", "jaccard")
-    )
-
-
-def minhash_index_accept(
-    index_df: DataFrame,
-    new_df: DataFrame,
-    screened_pairs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Close the ingest cycle: the updated index after ACCEPTING a
-    screened batch's keepers — base index UNION the band signatures of
-    batch docs with no near-dup match.  The next batch screens against
-    the returned index, so consecutive crawls also near-dedup against
-    each other's accepted docs (batch N+1 vs batch N), not just the
-    original corpus.  In production the union is a partition APPEND to
-    the materialized index table (signatures are immutable per doc);
-    here it composes the same plan.  Cost: one anti join on the
-    screened pair ids + one signature pass over the keepers only.
-    """
-    dropped = screened_pairs.select(F.col("new_id").alias(id_col)).distinct()
-    keepers = new_df.join(dropped, id_col, "left_anti")
-    return index_df.unionByName(
-        minhash_band_signatures(keepers, text_col, id_col)
     )
 
 

@@ -17,6 +17,7 @@ applied throughout:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -66,6 +67,7 @@ from ..operators.text import (
     word_frequencies,
 )
 from ..sources.registry import load_table
+from ..sources.warehouse import footer_row_count
 from ..streaming.event_windows import (
     sessionize,
     sliding_event_counts,
@@ -113,18 +115,7 @@ def resolve_oracle(qd: QueryDef, sf_dir: str) -> str | None:
 def parquet_num_rows(sf_dir: str, table: str) -> int:
     """Row count from parquet footer metadata — no engine needed, so
     data-adaptive oracle callables stay cheap and Spark-free."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(path):
-        return sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in glob.glob(os.path.join(path, "*.parquet"))
-        )
-    return pq.ParquetFile(path).metadata.num_rows
+    return footer_row_count(os.path.join(sf_dir, f"{table}.parquet"))
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -168,7 +159,6 @@ def _scan_split_estimate(sess: SparkSession, sf_dir: str, table: str) -> int:
     translation on the driver per query construction).  Cached per
     (sf_dir, table, conf) tuple."""
     import glob
-    import os
 
     max_pb = _conf_bytes(sess, "spark.sql.files.maxPartitionBytes", 128 << 20)
     open_cost = _conf_bytes(sess, "spark.sql.files.openCostInBytes", 4 << 20)
@@ -191,7 +181,6 @@ _BYTES_CACHE: dict[tuple, int] = {}
 def _scan_file_bytes(sf_dir: str, table: str, open_cost: int = 0) -> int:
     """Total on-disk bytes of a table's parquet file(s) + open costs."""
     import glob
-    import os
 
     key = (sf_dir, table, open_cost)
     got = _BYTES_CACHE.get(key)

@@ -2,8 +2,10 @@
 
 The reference declares a fixed DDL for its clean fact table
 (reference etl_pipeline.py:83-94) and infers the raw staging schema from
-the CSV (etl_pipeline.py:53).  Here the clean table gets an explicit
-StructType; the raw table keeps inference (it is a staging artifact).
+the CSV (etl_pipeline.py:53).  Here the clean table's types are fixed by
+the ETL itself: it reads the CSV as strings and ``try_cast``s ``year``
+and ``coverage_pct`` to the types below.  The raw table keeps inference
+(it is a staging artifact).
 """
 
 from __future__ import annotations
@@ -33,6 +35,10 @@ COVERAGE_PREFIX = "coverage__"
 # Table names in the warehouse (reference etl_pipeline.py:24-26).
 TABLE_RAW = "owid_raw"
 TABLE_CLEAN = "immunization"
+
+# Per-run record `run_etl` writes next to the tables: input, counts,
+# timings and Spark application id.
+RUN_MANIFEST = "run_manifest.json"
 
 # Star-schema test tables generated by the driver (TESTDATA.md).
 STAR_TABLES = (

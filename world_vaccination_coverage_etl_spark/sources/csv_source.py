@@ -10,11 +10,13 @@ logical plan.
 
 from __future__ import annotations
 
+import csv
 import os
 import tempfile
 import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_TIMEOUT_S = 60.0
 
@@ -49,7 +51,32 @@ def read_wide_csv(spark: SparkSession, path: str) -> DataFrame:
     """Lazy CSV scan with header + schema inference (raw staging table).
 
     Inference mirrors the reference's ``pd.read_csv`` behavior for the
-    untouched staging copy (etl_pipeline.py:53,81); the clean table gets
-    an explicit schema downstream.
+    untouched staging copy (etl_pipeline.py:53,81).  It costs a full
+    pass over the file before the scan, so `run_etl` runs it in the raw
+    writer thread, beside the clean write; the clean chain reads with
+    `read_wide_csv_strings` instead.
     """
     return spark.read.option("header", True).option("inferSchema", True).csv(path)
+
+
+def read_wide_csv_strings(spark: SparkSession, path: str) -> DataFrame:
+    """Lazy CSV scan with header and no inference: every column is a
+    string.
+
+    For a local file the header line is read here and passed as an
+    all-string schema, so the scan costs no Spark job before the one
+    that consumes it (Spark's own header read is one job per scan);
+    any other path lets Spark read the header.  Unnamed columns get
+    Spark's ``_c<i>`` names.  The clean chain types the columns it
+    keeps itself (``try_cast`` in `clean_immunization`), so one
+    unparseable cell becomes one dropped, counted row instead of
+    turning its whole column into strings.
+    """
+    reader = spark.read.option("header", True)
+    if not os.path.isfile(path):
+        return reader.csv(path)
+    with open(path, newline="", encoding="utf-8-sig") as f:
+        header = next(csv.reader(f), [])
+    return reader.schema(
+        T.StructType([T.StructField(n or f"_c{i}", T.StringType()) for i, n in enumerate(header)])
+    ).csv(path)

@@ -13,8 +13,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import STAR_TABLES
-
 
 def events_ts_is_nanos(sf_dir: str) -> bool:
     """Probe the events parquet footer for the physical type of ``ts``.
@@ -65,10 +63,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return raw.withColumn("ts", F.col("ts").cast("timestamp"))
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
-
-def register_star_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each star table as a temp view for the SQL API."""
-    for name in STAR_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            load_table(spark, sf_dir, name).createOrReplaceTempView(name)

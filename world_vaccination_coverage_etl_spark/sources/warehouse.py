@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def table_path(warehouse_dir: str, table: str) -> str:
@@ -37,8 +37,52 @@ def write_warehouse_table(
     return path
 
 
-def read_warehouse_table(spark: SparkSession, warehouse_dir: str, table: str) -> DataFrame:
-    return spark.read.parquet(table_path(warehouse_dir, table))
+def warehouse_filesystem(path: str):
+    """The pyarrow filesystem that holds ``path``, and the path in it.
+
+    A path without a scheme is local.  A URI (``file://``, ``hdfs://``,
+    ``s3://``, ...) goes through `pyarrow.fs.FileSystem.from_uri`; a
+    URI pyarrow cannot open (an unknown scheme such as Hadoop's
+    ``s3a://``, or ``hdfs://`` without libhdfs) raises ValueError.
+    """
+    from pyarrow import fs
+
+    if "://" not in path:
+        return fs.LocalFileSystem(), os.path.abspath(path)
+    try:
+        return fs.FileSystem.from_uri(path)
+    except (ValueError, NotImplementedError, OSError) as e:
+        raise ValueError(f"{path}: pyarrow cannot open this filesystem: {e}") from e
+
+
+def footer_row_count(path: str) -> int:
+    """Rows in a parquet file or dataset directory, summed from the
+    files' footers with pyarrow: no Spark job, no data read.
+
+    For a directory it counts the files a Spark read of ``path`` lists:
+    every file in it and its subdirectories (partition directories
+    included) except those with a path part starting with ``_`` or
+    ``.`` (``_SUCCESS``, ``_temporary``, checksum files), which Spark's
+    file index skips.  ``path`` may be any URI `warehouse_filesystem`
+    opens.
+    """
+    import posixpath
+
+    import pyarrow.parquet as pq
+    from pyarrow import fs
+
+    filesystem, root = warehouse_filesystem(path)
+    if filesystem.get_file_info(root).type != fs.FileType.Directory:
+        return pq.read_metadata(root, filesystem=filesystem).num_rows
+    return sum(
+        pq.read_metadata(f.path, filesystem=filesystem).num_rows
+        for f in filesystem.get_file_info(fs.FileSelector(root, recursive=True))
+        if f.type == fs.FileType.File
+        and not any(
+            part.startswith(("_", "."))
+            for part in posixpath.relpath(f.path, root).split("/")
+        )
+    )
 
 
 def write_sorted_table(
