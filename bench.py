@@ -28,7 +28,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+sys.path.insert(0, os.path.join(HERE, "tools"))
+
+from bench_compare import host_factor, load_baseline_md  # noqa: E402
+from measure import time_query, warm_up  # noqa: E402
 
 from world_vaccination_coverage_etl_spark.queries import REGISTRY  # noqa: E402
 from world_vaccination_coverage_etl_spark.queries._core import (  # noqa: E402
@@ -49,28 +54,7 @@ def main() -> int:
         sf_num = None
     spark = get_spark("bench")
 
-    # warm the JVM/codegen/Python-worker pools outside the measured
-    # pass: q1 for codegen + ONE scan of every warehouse table (r10 —
-    # the measured pass runs in rotation-independent sorted order, so
-    # no query may depend on a lucky neighbor having paged its table
-    # in; the r9 sub-second baselines silently did)
-    REGISTRY["q1_pricing_summary"].fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    from world_vaccination_coverage_etl_spark.schemas import STAR_TABLES
-    from world_vaccination_coverage_etl_spark.sources.registry import load_table
-
-    for t in STAR_TABLES:
-        load_table(spark, sf_dir, t).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    # spawn the FULL python worker pool before measuring: the fanned-
-    # out Arrow queries run 32 concurrent workers, and whichever such
-    # query runs first otherwise eats the ~seconds spawn storm
-    dp = spark.sparkContext.defaultParallelism
-    spark.range(dp * 4, numPartitions=dp).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_up(spark, sf_dir)
 
     all_runs: dict[str, list[float]] = {}
     t_total = time.time()
@@ -95,29 +79,18 @@ def main() -> int:
     # compare like for like.
     for pass_i in range(2):
         for name in sorted(REGISTRY):
-            qd = REGISTRY[name]
-            if pass_i == 0 and name in POOLED_QUERIES:
-                # a pooled query's FIRST sample must be genuinely cold
-                # even when a sibling already materialized the shared
-                # pool (sorted order would otherwise let
-                # dup_cluster_sizes pre-warm dup_connected_components):
-                # pass 1 measures the real computation (recorded in
-                # pooled_cold, gated via cold_norm), pass 2 measures
-                # the steady-state pool hit (the best-of-2 min)
-                from world_vaccination_coverage_etl_spark.queries._core import (
-                    clear_pools,
+            # a pooled query's FIRST sample is genuinely cold even when
+            # a sibling already materialized the shared pool (sorted
+            # order would otherwise let dup_cluster_sizes pre-warm
+            # dup_connected_components): pass 1 measures the real
+            # computation (recorded in pooled_cold, gated via
+            # cold_norm), pass 2 the steady-state pool hit (the min)
+            all_runs.setdefault(name, []).append(
+                time_query(
+                    spark, sf_dir, name,
+                    cold=pass_i == 0 and name in POOLED_QUERIES,
                 )
-
-                clear_pools()
-            # local-mode hygiene: tens of varied queries in one JVM
-            # leave garbage + weakly-referenced cleaner state that only
-            # a full GC releases; without this, later Arrow-UDF queries
-            # measure 3-8x slower (GC churn), which a per-executor-heap
-            # cluster never sees.  Measured: 31.7s -> 3.9s on one query.
-            spark._jvm.System.gc()
-            t0 = time.time()
-            qd.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            all_runs.setdefault(name, []).append(round(time.time() - t0, 3))
+            )
             if pass_i:
                 print(
                     f"[bench] {name} {min(all_runs[name])}s",
@@ -146,9 +119,9 @@ def main() -> int:
         # run is recorded separately and gated below).  The two
         # streaming resume-pool queries' first runs are naturally
         # cold in a fresh bench process; they are recorded here too
-        # but gated by tools/streaming_scale_probe.py (their baseline
-        # rows were recorded as resume cost, so cold-vs-baseline
-        # would be apples-to-oranges).
+        # but gated by `tools/measure.py probe` (their baseline rows
+        # were recorded as resume cost, so cold-vs-baseline would be
+        # apples-to-oranges).
         "runs": all_runs,
         "pooled_cold": {
             q: all_runs[q][0]
@@ -167,12 +140,7 @@ def main() -> int:
     # cannot move it); the worst-5 normalized ratios separate "plan
     # slower" from "host slower" mechanically in the captured tail.
     try:
-        sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
-        from bench_compare import host_factor, load_baseline_md
-
-        base = load_baseline_md(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BASELINE.md")
-        )
+        base = load_baseline_md(os.path.join(HERE, "BASELINE.md"))
         # suspect re-measure (late-r9; r10 ADVICE fix): one unlucky
         # sample must not declare a 2x breach.  Any query whose
         # best-of-2 exceeds 2x its recorded row gets ONE more measured
@@ -186,12 +154,7 @@ def main() -> int:
             if q in per_query and base[q] > 0 and per_query[q] / base[q] > 2.0
         ]
         for q in suspects:
-            spark._jvm.System.gc()
-            t0 = time.time()
-            REGISTRY[q].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            t = round(time.time() - t0, 3)
+            t = time_query(spark, sf_dir, q, cold=False)
             obs = sorted(all_runs.get(q, [per_query[q]] * 2) + [t])
             med = obs[len(obs) // 2]
             if med != per_query[q]:
@@ -229,9 +192,8 @@ def main() -> int:
         # table at the same core count (fall back to the legacy stable
         # name), host-normalizing the same way.
         cpus_now = full["cpus"]
-        here = os.path.dirname(os.path.abspath(__file__))
         for prev_name in (f"BENCH_LOCAL_c{cpus_now}.json", "BENCH_LOCAL.json"):
-            prev_path = os.path.join(here, prev_name)
+            prev_path = os.path.join(HERE, prev_name)
             if os.path.exists(prev_path):
                 with open(prev_path) as fh:
                     prev_q = json.load(fh).get("queries") or {}
@@ -265,22 +227,12 @@ def main() -> int:
         # gets ONE more genuinely-cold run (clear_pools first) and the
         # MIN is recorded — the same best-of-2 statistic as the warm
         # numbers, still fully cold.
-        from world_vaccination_coverage_etl_spark.queries._core import (
-            clear_pools as _clear_pools,
-        )
-
         for q in sorted(full["pooled_cold"]):
             if q not in POOLED_QUERIES or base.get(q, 0) <= 0:
                 continue
             if full["pooled_cold"][q] / base[q] <= 2.0:
                 continue
-            _clear_pools()
-            spark._jvm.System.gc()
-            t0 = time.time()
-            REGISTRY[q].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            t = round(time.time() - t0, 3)
+            t = time_query(spark, sf_dir, q, cold=True)
             print(
                 f"[bench] cold re-measure {q}: {full['pooled_cold'][q]}s "
                 f"-> min with {t}s",
@@ -296,9 +248,8 @@ def main() -> int:
     except Exception as exc:  # noqa: BLE001 — comparison is advisory
         print(f"[bench] baseline compare skipped: {exc}", file=sys.stderr)
 
-    here = os.path.dirname(os.path.abspath(__file__))
     local_path = os.environ.get("SPARK_GRAFT_BENCH_OUT") or os.path.join(
-        here, "BENCH_LOCAL.json"
+        HERE, "BENCH_LOCAL.json"
     )
     # per-core-count artifact FIRST (r13 verdict item 1: the driver's
     # 8-core rerun overwrote BENCH_LOCAL.json, destroying the 32-core
@@ -306,7 +257,7 @@ def main() -> int:
     # a different core count — BENCH_LOCAL.json stays as the stable
     # name for tooling that expects it)
     for path in (
-        os.path.join(here, f"BENCH_LOCAL_c{full['cpus']}.json"),
+        os.path.join(HERE, f"BENCH_LOCAL_c{full['cpus']}.json"),
         local_path,
     ):
         with open(path, "w") as fh:

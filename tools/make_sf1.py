@@ -7,8 +7,7 @@ parquet warehouse with the same schemas to ``.scale/sf1`` (gitignored;
 /root/testdata is read-only) so every registry query and bench.py can
 run against it unmodified via ``SPARK_GRAFT_SF_DIR``.
 
-Amplification (seeded by the copy index c in 0..9, same scheme as
-tools/scale_probe.py):
+Amplification (seeded by the copy index c in 0..9):
 
 - facts get 10 copies with ids shifted into disjoint ranges
   (``+ c * 10_000_000``): orders.o_orderkey and lineitem.l_orderkey
@@ -36,7 +35,8 @@ Perturbation modes (4th arg):
   short copy marker — copies of one doc stay NEAR-DUPS of each other,
   so the near-dup clique per doc grows with the copy count.  Right for
   stressing candidate-volume behavior, but the exact pair answer grows
-  quadratically in N (see SCALING_OUTPUT_ROWS.json).
+  quadratically in N (`tools/measure.py probe` records the output
+  ratio and lifts the bound by it).
 - ``decorrelated``: every 7th word gets a copy-indexed suffix (~43% of
   word-trigram shingles change ⇒ cross-copy Jaccard ≈ 0.4, under every
   registered threshold) and embeddings get a per-(copy, component)

@@ -41,6 +41,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from measure import time_query, warm_up  # noqa: E402
+
 from world_vaccination_coverage_etl_spark.queries import REGISTRY  # noqa: E402
 from world_vaccination_coverage_etl_spark.session import get_spark  # noqa: E402
 
@@ -67,31 +69,8 @@ def main() -> int:
     ).stdout.strip()
     load_start = _loadavg()
     spark = get_spark("record_baseline")
-    # same warmup as bench.py (recording and comparison MUST share
-    # measurement context): q1 + one scan of every warehouse table
-    REGISTRY["q1_pricing_summary"].fn(spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    from world_vaccination_coverage_etl_spark.schemas import STAR_TABLES
-    from world_vaccination_coverage_etl_spark.sources.registry import load_table
-
-    for t in STAR_TABLES:
-        load_table(spark, sf_dir, t).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    # spawn the full python worker pool (see bench.py)
-    dp = spark.sparkContext.defaultParallelism
-    spark.range(dp * 4, numPartitions=dp).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    def timed(name: str) -> float:
-        spark._jvm.System.gc()
-        t0 = time.time()
-        REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.time() - t0
+    # recording and comparison MUST share measurement context
+    warm_up(spark, sf_dir)
 
     per_query: dict[str, float] = {}
     t_wall = time.time()
@@ -105,11 +84,11 @@ def main() -> int:
     samples: dict[str, list[float]] = {n: [] for n in names}
     for _pass in range(2):
         for name in names:
-            samples[name].append(timed(name))
+            samples[name].append(time_query(spark, sf_dir, name, cold=False))
     for name in names:
         a, b = samples[name]
         if min(a, b) < 1.0:  # sub-second cohort: MEDIAN-of-3
-            best = sorted((a, b, timed(name)))[1]
+            best = sorted((a, b, time_query(spark, sf_dir, name, cold=False)))[1]
         else:  # plan-dominated cohort: best-of-2 min (bench.py's rule)
             best = min(a, b)
         per_query[name] = round(best, 3)

@@ -17,16 +17,14 @@ import argparse
 import json
 import os
 import sys
-import time
 import urllib.request
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from world_vaccination_coverage_etl_spark.queries import REGISTRY  # noqa: E402
-from world_vaccination_coverage_etl_spark.schemas import STAR_TABLES  # noqa: E402
+from measure import time_query, warm_up  # noqa: E402
+
 from world_vaccination_coverage_etl_spark.session import get_spark  # noqa: E402
-from world_vaccination_coverage_etl_spark.sources.registry import load_table  # noqa: E402
 
 
 def rest(base: str, path: str):
@@ -49,25 +47,14 @@ def main() -> int:
     sc = spark.sparkContext
     base = sc.uiWebUrl + "/api/v1/applications/" + sc.applicationId
 
-    # bench-faithful warmup
-    REGISTRY["q1_pricing_summary"].fn(spark, args.sf).write.format(
-        "noop").mode("overwrite").save()
-    for t in STAR_TABLES:
-        load_table(spark, args.sf, t).write.format("noop").mode(
-            "overwrite").save()
+    warm_up(spark, args.sf)
     dp = sc.defaultParallelism
-    spark.range(dp * 4, numPartitions=dp).mapInPandas(
-        lambda it: it, "id long").write.format("noop").mode("overwrite").save()
 
     for name in args.queries:
         for run_i in range(args.runs):
-            spark._jvm.System.gc()
             jobs_before = {j["jobId"] for j in rest(base, "/jobs")}
             sc.setJobDescription(f"profile:{name}")
-            t0 = time.time()
-            REGISTRY[name].fn(spark, args.sf).write.format("noop").mode(
-                "overwrite").save()
-            wall = time.time() - t0
+            wall = time_query(spark, args.sf, name, cold=False)
             sc.setJobDescription(None)
 
             jobs = [j for j in rest(base, "/jobs")

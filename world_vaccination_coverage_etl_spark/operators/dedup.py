@@ -36,19 +36,6 @@ from pyspark.sql import types as T
 
 from .staging import stage
 
-
-def _stage(df: DataFrame, staging_dir: str | None, name: str) -> DataFrame:
-    """Cut a DataFrame's lineage so expensive kernels evaluate ONCE.
-
-    The signature/shingle Arrow UDFs feed both sides of the blocking
-    self-joins; without a lineage cut Catalyst inlines them into every
-    consumer and the kernel runs 2-4×.  Delegates to the shared
-    :func:`..staging.stage` helper (localCheckpoint by default, durable
-    parquet staging when ``staging_dir`` is given — see that module
-    for the cluster-scale rationale).
-    """
-    return stage(df, staging_dir, name)
-
 # --------------------------------------------------------------------------
 # exact
 
@@ -327,8 +314,10 @@ def minhash_near_dup_pairs(
     """
     # fused single-pass kernel (bands + shingles; see
     # _minhash_bands_and_shingles): one tokenize+shingle pass, one
-    # staged table feeding all four consumers below
-    both = _stage(
+    # staged table feeding all four consumers below.  The Arrow kernel
+    # feeds both sides of the blocking self-join; without the lineage
+    # cut Catalyst inlines it into every consumer and it runs 2-4x.
+    both = stage(
         df.select(
             F.col(id_col),
             _minhash_bands_and_shingles(F.col(text_col)).alias("bs"),
@@ -433,7 +422,7 @@ def minhash_screen_new_batch(
     # fused single-pass kernel over the batch (see
     # _minhash_bands_and_shingles): band signatures AND the verify
     # shingles in one tokenize+shingle pass instead of two
-    both = _stage(
+    both = stage(
         new_df.select(
             F.col(id_col),
             _minhash_bands_and_shingles(F.col(text_col)).alias("bs"),
@@ -1299,7 +1288,7 @@ def simhash_md5_near_dup_pairs(
     signed = simhash_md5_signatures_kernel(df, text_col, id_col)
     # one narrow materialization so the signature kernel runs once, not
     # once per blocking-join side
-    signed = _stage(signed, staging_dir, "simhash_md5_signed")
+    signed = stage(signed, staging_dir, "simhash_md5_signed")
     g = signed.groupBy("sig_hi", "sig_lo").agg(F.min(id_col).alias("gid"))
     members = signed.join(g, on=["sig_hi", "sig_lo"]).select(id_col, "gid")
 
@@ -1743,7 +1732,7 @@ def embedding_screen_new_batch(
     ``embedding_cosine_dup_pairs`` (defaults: ≈0.9989 at c=0.95,
     exactly 1 for true duplicates); precision is exact.
     """
-    new_bkts = _stage(
+    new_bkts = stage(
         signlsh_bucket_assignments(
             new_df, vec_col, id_col,
             dim=dim, lsh_bits=lsh_bits, lsh_tables=lsh_tables,

@@ -218,8 +218,8 @@ _MATERIALIZE_POOL: dict[tuple, str] = {}
 # regression gate is the COLD first run (bench.py "cold_norm"), not
 # the min.  The two m05 file-sink streaming queries are pooled too
 # (exactly-once resume semantics) — their fresh-checkpoint cost is
-# gated by tools/streaming_scale_probe.py instead, per the r10
-# ADVICE alternative.
+# gated by `tools/measure.py probe` instead (cold samples clear the
+# resume pool), per the r10 ADVICE alternative.
 POOLED_QUERIES = frozenset(
     {
         "dup_connected_components",

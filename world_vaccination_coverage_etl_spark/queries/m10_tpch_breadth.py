@@ -1563,6 +1563,7 @@ def q_fuzzy_entity_clusters(spark, sf_dir):
 
     def build(spark, sf_dir):
         from ..operators.components import connected_components
+        from ..operators.staging import stage
 
         g, members, gpairs = _fuzzy_group_graph(spark, sf_dir)
         gpairs = gpairs.select("gid_a", "gid_b").localCheckpoint(eager=False)
@@ -1577,7 +1578,10 @@ def q_fuzzy_entity_clusters(spark, sf_dir):
             .unionAll(gpairs.select(F.col("gid_b").alias("gid")))
             .distinct()
         )
-        matched = matched.localCheckpoint(eager=False)
+        # eager: the CC nodes and the member join both consume it, and
+        # AQE can run their stages at once, each computing a lazy
+        # checkpoint's fuzzy-match lineage (see staging.stage)
+        matched = stage(matched, None, "fuzzy_matched_gids")
         m = members.join(matched, on="gid")
         # r14 (guide §1.2 — shrink what the ITERATIVE operator sees):
         # the doc→gid star edges used to ride through every CC round,

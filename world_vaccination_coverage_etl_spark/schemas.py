@@ -1,28 +1,17 @@
-"""Explicit schemas for the engine's tables.
+"""Names and constants for the engine's tables.
 
 The reference declares a fixed DDL for its clean fact table
 (reference etl_pipeline.py:83-94) and infers the raw staging schema from
 the CSV (etl_pipeline.py:53).  Here the clean table's types are fixed by
-the ETL itself: it reads the CSV as strings and ``try_cast``s ``year``
-and ``coverage_pct`` to the types below.  The raw table keeps inference
-(it is a staging artifact).
+the ETL itself: it reads the CSV as strings and
+``plans.pipeline.clean_immunization`` ``try_cast``s ``year`` to int and
+``coverage_pct`` to double.  The raw table keeps inference (it is a
+staging artifact).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import types as T
-
-# Tidy fact table: one row per (country, antigen, year) observation.
-# Mirrors reference etl_pipeline.py:83-94 (CREATE TABLE immunization ...).
-IMMUNIZATION_SCHEMA = T.StructType(
-    [
-        T.StructField("country", T.StringType(), False),
-        T.StructField("antigen", T.StringType(), False),
-        T.StructField("year", T.IntegerType(), False),
-        T.StructField("coverage_pct", T.DoubleType(), True),
-    ]
-)
-
+# Key of the tidy fact table: one row per (country, antigen, year).
 IMMUNIZATION_KEY = ["country", "antigen", "year"]
 
 # Year sanity clamp applied during ETL (reference etl_pipeline.py:75).
