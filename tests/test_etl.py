@@ -438,6 +438,10 @@ def test_cli_main_writes_csv_and_chart_artifacts(spark, tmp_path, capsys):
     from world_vaccination_coverage_etl_spark.cli import main
 
     csv = _write_wide_csv(tmp_path / "wide.csv", WIDE_ROWS)
+    # a Spark output directory left by an earlier release is replaced
+    series_csv = tmp_path / "coverage_Aland_coverage__bcg.csv"
+    series_csv.mkdir()
+    (series_csv / "part-00000.csv").write_text("stale\n")
 
     rc = main(
         [
@@ -453,7 +457,10 @@ def test_cli_main_writes_csv_and_chart_artifacts(spark, tmp_path, capsys):
     )
     assert rc == 0
     assert f"ETL complete: 5 clean rows -> {tmp_path / 'warehouse'}" in capsys.readouterr().out
-    assert (tmp_path / "coverage_Aland_coverage__bcg.csv").exists()
+    assert series_csv.is_file()
+    assert series_csv.read_text().splitlines() == [
+        "year,coverage_pct", "1990,70.0", "1991,72.0",
+    ]
     chart = tmp_path / "coverage_Aland_coverage__bcg.svg"
     assert chart.exists()
     svg = chart.read_text()
@@ -539,3 +546,9 @@ def test_default_cpus_is_usable_core_count(monkeypatch):
     assert default_cpus() == len(os.sched_getaffinity(0))
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert default_cpus() == 3
+
+
+def test_session_turns_console_progress_off(spark):
+    """`get_spark` sessions print no stage progress bars."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.ui.showConsoleProgress") == "false"

@@ -12,7 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from world_vaccination_coverage_etl_spark.operators.heavyhitters import (
-    heavy_hitters,
     misra_gries_summary,
 )
 
@@ -83,18 +82,6 @@ def test_exact_when_k_covers_cardinality(spark):
     summ = {r["key"]: r["est"] for r in
             misra_gries_summary(df, "key", k=8).collect()}
     assert summ == _exact(df)  # no pruning ever triggers: est == exact
-
-
-def test_two_pass_heavy_hitters_exact_counts(skewed):
-    exact = _exact(skewed)
-    out = {r["key"]: r["exact_count"] for r in
-           heavy_hitters(skewed, "key", k=16).collect()}
-    # candidates carry EXACT counts (second pass), and every
-    # guaranteed-heavy key is present with its true count
-    for key, cnt in out.items():
-        assert cnt == exact[key]
-    for key in HOT:
-        assert out[key] == HOT[key]
 
 
 def test_nulls_dropped_and_k_validated(spark):

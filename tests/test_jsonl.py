@@ -1,14 +1,11 @@
-"""JSONL export/import roundtrip tests (sources/jsonl.py)."""
+"""JSONL export tests (sources/jsonl.py)."""
 
 from __future__ import annotations
 
 import json
 import os
 
-from world_vaccination_coverage_etl_spark.sources.jsonl import (
-    read_jsonl,
-    write_jsonl,
-)
+from world_vaccination_coverage_etl_spark.sources.jsonl import write_jsonl
 
 SCHEMA = "doc_id long, text string, split string"
 ROWS = [(1, "alpha", "train"), (2, 'quote " and \\ slash', "val"), (3, "", "train")]
@@ -18,7 +15,7 @@ def test_directory_roundtrip(spark, tmp_path):
     df = spark.createDataFrame(ROWS, SCHEMA)
     out = str(tmp_path / "corpus_jsonl")
     write_jsonl(df, out)
-    back = read_jsonl(spark, out, SCHEMA)
+    back = spark.read.schema(SCHEMA).json(out)
     assert sorted(map(tuple, back.collect())) == sorted(ROWS)
 
 
@@ -34,15 +31,3 @@ def test_single_file_deterministic(spark, tmp_path):
     lines = [json.loads(ln) for ln in b1.decode().splitlines()]
     assert [ln["doc_id"] for ln in lines] == [1, 2, 3]
     assert lines[1]["text"] == 'quote " and \\ slash'
-
-
-def test_corrupt_record_surfacing(spark, tmp_path):
-    p = tmp_path / "mixed.jsonl"
-    p.write_text('{"doc_id": 1, "text": "ok"}\nNOT JSON\n')
-    back = read_jsonl(
-        spark, str(p), "doc_id long, text string, _corrupt_record string"
-    ).collect()
-    good = [r for r in back if r["_corrupt_record"] is None]
-    bad = [r for r in back if r["_corrupt_record"] is not None]
-    assert len(good) == 1 and good[0]["doc_id"] == 1
-    assert len(bad) == 1 and bad[0]["_corrupt_record"] == "NOT JSON"

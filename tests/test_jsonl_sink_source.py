@@ -112,43 +112,6 @@ def test_time_travel_reads_old_snapshots(spark, tmp_path):
     assert {r.id for r in _read(spark, p, "id long").collect()} == at(3)
 
 
-def test_vacuum_prunes_past_retention(spark, tmp_path):
-    from world_vaccination_coverage_etl_spark.sources.jsonl_sink_source import (
-        vacuum_jsonl_manifest,
-    )
-
-    p = str(tmp_path / "t6")
-    _write(spark, spark.range(0, 4).select(F.col("id")), p)               # v1
-    _write(spark, spark.range(10, 13).select(F.col("id")), p, "overwrite")  # v2
-    _write(spark, spark.range(20, 22).select(F.col("id")), p, "append")     # v3
-    report = vacuum_jsonl_manifest(p, retain=2)
-    # v1's files are referenced by no retained snapshot -> deleted
-    assert report["deleted_versions"] == [1]
-    assert len(report["deleted_files"]) > 0
-    register_jsonl_manifest(spark)
-    # retained snapshots still read fine
-    v2 = {
-        r.id
-        for r in spark.read.format("jsonl_manifest")
-        .schema("id long")
-        .option("version", 2)
-        .load(p)
-        .collect()
-    }
-    assert v2 == {10, 11, 12}
-    # expired snapshot fails FAST (manifest gone), never a partial read
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        spark.read.format("jsonl_manifest").schema("id long").option(
-            "version", 1
-        ).load(p).collect()
-
-
-# ---------------------------------------------------------------------- #
-# streaming writer (DataSourceStreamWriter)
-
-
 def _start_stream(spark, src_dir, table, ck):
     register_jsonl_manifest(spark)
     stream = spark.readStream.schema("id long, v double").parquet(src_dir)
@@ -296,29 +259,6 @@ def test_concurrent_stream_commits_lose_nothing(tmp_path):
     assert man["version"] == 20  # one version per commit, no collisions
     for e in man["files"]:
         assert os.path.exists(os.path.join(table, e["file"]))
-
-
-def test_vacuum_pre_versioning_table(tmp_path):
-    """A manifest without a _versions dir (pre-versioning layout) must
-    vacuum cleanly: HEAD is the only snapshot, no snapshot pruning."""
-    from world_vaccination_coverage_etl_spark.sources.jsonl_sink_source import (
-        vacuum_jsonl_manifest,
-    )
-
-    table = str(tmp_path / "old")
-    os.makedirs(table)
-    with open(os.path.join(table, "part-live.jsonl"), "w") as fh:
-        fh.write('{"id": 1}\n')
-    with open(os.path.join(table, "part-orphan.jsonl"), "w") as fh:
-        fh.write('{"id": 2}\n')
-    with open(os.path.join(table, MANIFEST), "w") as fh:
-        json.dump(
-            {"files": [{"file": "part-live.jsonl", "n_rows": 1}]}, fh
-        )  # no "version" key, no _versions dir
-    out = vacuum_jsonl_manifest(table, retain=2)
-    assert out["deleted_versions"] == []
-    assert out["deleted_files"] == ["part-orphan.jsonl"]
-    assert os.path.exists(os.path.join(table, "part-live.jsonl"))
 
 
 def test_writer_rejects_remote_scheme(tmp_path):

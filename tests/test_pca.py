@@ -1,46 +1,17 @@
-"""PCA building blocks: distributed covariance + driver eigensolve."""
+"""Distributed fixed-point covariance (operators/pca.py)."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from world_vaccination_coverage_etl_spark.operators.pca import (
-    embedding_covariance,
     embedding_covariance_fixedpoint,
-    pca_top_components,
 )
 
 
 def _vec_df(spark, m):
     rows = [(i, [float(x) for x in m[i]]) for i in range(m.shape[0])]
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_covariance_matches_numpy(spark):
-    rng = np.random.default_rng(7)
-    m = rng.normal(size=(200, 8)).astype(np.float32)
-    df = _vec_df(spark, m)
-    got = {
-        (r.i, r.j): r.cov
-        for r in embedding_covariance(df, dim=8, round_dp=9).collect()
-    }
-    exp = np.cov(m.astype(np.float64).T, bias=True)  # population
-    assert len(got) == 64
-    for (i, j), v in got.items():
-        assert v == pytest.approx(exp[i, j], abs=1e-6)
-
-
-def test_covariance_symmetric(spark):
-    rng = np.random.default_rng(11)
-    m = rng.normal(size=(100, 4)).astype(np.float32)
-    got = dict(
-        ((r.i, r.j), r.cov)
-        for r in embedding_covariance(_vec_df(spark, m), dim=4).collect()
-    )
-    for i in range(4):
-        for j in range(4):
-            assert got[(i, j)] == got[(j, i)]
 
 
 def test_fixedpoint_matches_exact_python(spark):
@@ -101,18 +72,3 @@ def test_fixedpoint_partition_invariant_adversarial(spark):
         for v in variants
     ]
     assert results[0] == results[1] == results[2] == results[3]
-
-
-def test_pca_recovers_planted_direction(spark):
-    # data = strong variance along a known axis + small isotropic noise
-    rng = np.random.default_rng(3)
-    direction = np.zeros(8)
-    direction[2] = 1.0
-    t = rng.normal(scale=10.0, size=(500, 1))
-    noise = rng.normal(scale=0.1, size=(500, 8))
-    m = (t @ direction[None, :] + noise).astype(np.float32)
-    vals, comps, ratio = pca_top_components(_vec_df(spark, m), k=2, dim=8)
-    assert vals[0] > 50 * vals[1]          # planted axis dominates
-    assert abs(comps[0][2]) > 0.99         # aligns with e_2
-    assert comps[0][np.argmax(np.abs(comps[0]))] > 0  # sign convention
-    assert 0.99 < ratio[0] <= 1.0

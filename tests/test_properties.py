@@ -10,7 +10,10 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from world_vaccination_coverage_etl_spark.functions.report import render_pdf
+from world_vaccination_coverage_etl_spark.functions.report import (
+    _LINES_PER_PAGE,
+    render_pdf_pages,
+)
 from world_vaccination_coverage_etl_spark.functions.tdist import t_cdf, t_ppf
 
 _q = st.floats(min_value=0.001, max_value=0.999, allow_nan=False)
@@ -58,7 +61,13 @@ def test_hash_split_threshold_monotone(doc_id, f1, f2):
 @settings(max_examples=50, deadline=None)
 @given(st.lists(st.text(min_size=0, max_size=120), min_size=0, max_size=200))
 def test_render_pdf_always_valid_skeleton(lines):
-    data = render_pdf(lines)
+    # paginated as save_pdf_report does, so 0-200 lines make 1-4 pages
+    pages = [
+        lines[i : i + _LINES_PER_PAGE]
+        for i in range(0, max(len(lines), 1), _LINES_PER_PAGE)
+    ]
+    data = render_pdf_pages(pages)
+    assert f"/Count {len(pages)} >>".encode() in data
     assert data.startswith(b"%PDF-1.4")
     assert data.rstrip().endswith(b"%%EOF")
     # every xref offset points at its object header

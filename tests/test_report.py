@@ -8,14 +8,14 @@ import pytest
 
 from world_vaccination_coverage_etl_spark.functions.chart import save_series_chart
 from world_vaccination_coverage_etl_spark.functions.report import (
-    render_pdf,
+    render_pdf_pages,
     report_lines,
     save_pdf_report,
 )
 
 
 def test_render_pdf_structure():
-    data = render_pdf(["hello", "world"])
+    data = render_pdf_pages([["hello", "world"]])
     assert data.startswith(b"%PDF-1.4")
     assert data.rstrip().endswith(b"%%EOF")
     assert b"/Type /Catalog" in data and b"/Type /Page " in data
@@ -28,10 +28,15 @@ def test_render_pdf_structure():
         assert data[off:].startswith(f"{i} 0 obj".encode())
 
 
-def test_render_pdf_escapes_and_paginates():
-    data = render_pdf([r"paren (x) and \ backslash"] + [f"row {i}" for i in range(120)])
+def test_render_pdf_escapes_and_paginates(tmp_path):
+    data = render_pdf_pages([[r"paren (x) and \ backslash"]])
     assert rb"(paren \(x\) and \\ backslash) Tj" in data
-    assert data.count(b"/Type /Page ") == 3  # 121 lines / 54 per page
+    pdf = save_pdf_report(
+        str(tmp_path / "r.pdf"), "T", [f"row {i}" for i in range(120)],
+        today=dt.date(2026, 8, 13),
+    )
+    # cover + 123 body lines (title, date, blank, 120 rows) / 54 per page
+    assert open(pdf, "rb").read().count(b"/Type /Page ") == 4
 
 
 def test_report_lines_layout_and_caps():

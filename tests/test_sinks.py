@@ -1,41 +1,14 @@
-"""CSV sink round-trip + filename/empty guards."""
+"""Artifact-name helper, compaction and file-format round trips."""
 
 from __future__ import annotations
 
-import pytest
-
-from world_vaccination_coverage_etl_spark.sources.sinks import (
-    assert_nonempty,
-    sanitize_filename,
-    write_csv,
-)
-
-
-def test_csv_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame(
-        [("Aland", 1990, 70.0), ("Borland", 1991, 80.5)],
-        "country string, year int, coverage_pct double",
-    )
-    path = str(tmp_path / "export")
-    write_csv(df, path, single_file=True)
-    back = spark.read.option("header", True).option("inferSchema", True).csv(path)
-    assert {(r.country, r.year, r.coverage_pct) for r in back.collect()} == {
-        ("Aland", 1990, 70.0),
-        ("Borland", 1991, 80.5),
-    }
+from world_vaccination_coverage_etl_spark.sources.sinks import sanitize_filename
 
 
 def test_sanitize_filename():
     assert sanitize_filename("Aland Islands/bcg") == "Aland_Islands-bcg"
     assert sanitize_filename("weird:*name?.csv") == "weirdname.csv"
     assert sanitize_filename("ok-1.2_x") == "ok-1.2_x"
-
-
-def test_assert_nonempty(spark):
-    df = spark.createDataFrame([(1,)], "x int")
-    assert assert_nonempty(df) is df
-    with pytest.raises(ValueError, match="empty series"):
-        assert_nonempty(df.filter("x > 5"), context="series")
 
 
 def test_compact_parquet_merges_small_files(spark, tmp_path):

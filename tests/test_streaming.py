@@ -1,52 +1,14 @@
-"""Streaming tests: AvailableNow incremental refresh + event windows."""
+"""Streaming tests: event-time windows and sessions."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import types as T
-
-from world_vaccination_coverage_etl_spark.schemas import TABLE_CLEAN
-from world_vaccination_coverage_etl_spark.sources.warehouse import table_path
 from world_vaccination_coverage_etl_spark.streaming.event_windows import (
     sessionize,
     sliding_event_counts,
     tumbling_event_counts,
 )
-from world_vaccination_coverage_etl_spark.streaming.refresh import (
-    streaming_refresh_available_now,
-)
-
-WIDE_SCHEMA = T.StructType(
-    [
-        T.StructField("entity", T.StringType()),
-        T.StructField("year", T.IntegerType()),
-        T.StructField("coverage__bcg", T.DoubleType()),
-    ]
-)
-
-
-def test_streaming_refresh_available_now(spark, tmp_path):
-    staging = tmp_path / "staging"
-    warehouse = tmp_path / "warehouse"
-    ckpt = tmp_path / "ckpt"
-    staging.mkdir()
-    (staging / "batch1.csv").write_text("entity,year,coverage__bcg\nAland,1990,70.0\n")
-
-    streaming_refresh_available_now(
-        spark, str(staging), str(warehouse), str(ckpt), WIDE_SCHEMA
-    )
-    out1 = spark.read.parquet(table_path(str(warehouse), TABLE_CLEAN)).collect()
-    assert {(r.country, r.year) for r in out1} == {("Aland", 1990)}
-
-    # a second file arrives; AvailableNow processes only the delta, and
-    # the foreachBatch load is truncate-and-reload per batch
-    (staging / "batch2.csv").write_text("entity,year,coverage__bcg\nBorland,1991,80.0\n")
-    streaming_refresh_available_now(
-        spark, str(staging), str(warehouse), str(ckpt), WIDE_SCHEMA
-    )
-    out2 = spark.read.parquet(table_path(str(warehouse), TABLE_CLEAN)).collect()
-    assert {(r.country, r.year) for r in out2} == {("Borland", 1991)}
 
 
 def _events(spark):

@@ -12,8 +12,8 @@ Layout
 - ``operators``   : reshaping, dedup, similarity, text analysis, window
                     comparison, multimodal plumbing
 - ``functions``   : scalar/aggregate kernels (Student-t, Welch, CI, flags)
-- ``streaming``   : Structured Streaming flavors (AvailableNow refresh,
-                    event-time windowed aggregation)
+- ``streaming``   : Structured Streaming operators (event-time windows,
+                    sessions, stream joins, streaming dedup and upserts)
 
 Everything engine-side is DataFrame-in / DataFrame-out and lazy; Python
 touches data only in clearly-marked Pandas-UDF batch kernels or on

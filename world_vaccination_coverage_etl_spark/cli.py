@@ -6,10 +6,11 @@ ETL and print its counts from the run manifest, then — when
 ``--country``/``--antigen`` are given — collect that series once,
 compute the windowed comparison from the collected rows
 (functions/stats.py ``series_window_stats``), print the analysis
-block, and save the raw-series CSV + chart + PDF-report artifacts
-(functions/chart.py — SVG here, PNG when matplotlib is importable;
-functions/report.py — a dependency-free minimal PDF).  Together these
-complete the reference EP1 artifact set (CSV + plot + report).
+block, and save the raw-series CSV (one file, written with the stdlib
+``csv`` module from the collected rows) + chart + PDF-report artifacts
+(functions/chart.py — an SVG; functions/report.py — a dependency-free
+minimal PDF).  Together these complete the reference EP1 artifact set
+(CSV + plot + report).
 
 Usage::
 
@@ -22,7 +23,9 @@ Usage::
 from __future__ import annotations
 
 import argparse
+import csv
 import os
+import shutil
 import sys
 
 from pyspark.sql import SparkSession
@@ -36,7 +39,7 @@ from .plans.analytics import coverage_series
 from .plans.pipeline import read_run_manifest, run_etl
 from .session import get_spark
 from .sources.csv_source import stage_csv
-from .sources.sinks import sanitize_filename, write_csv
+from .sources.sinks import sanitize_filename
 
 
 def _parse_args(argv: list[str] | None) -> argparse.Namespace:
@@ -106,7 +109,13 @@ def run_analysis(
     artifact = os.path.join(
         out_dir, sanitize_filename(f"coverage_{country}_{antigen}") + ".csv"
     )
-    write_csv(series, artifact, single_file=True)
+    if os.path.isdir(artifact):
+        # earlier releases wrote this artifact as a Spark output directory
+        shutil.rmtree(artifact)
+    with open(artifact, "w", newline="") as fh:
+        writer = csv.writer(fh)
+        writer.writerow(("year", "coverage_pct"))
+        writer.writerows(series_rows)
     print(f"  Saved raw series -> {artifact}")
 
     # chart artifact (reference etl_pipeline.py:157-172) — rendered from

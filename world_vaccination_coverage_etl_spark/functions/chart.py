@@ -3,28 +3,17 @@ presentation edge (reference etl_pipeline.py:157-172: matplotlib line
 plot of the coverage series with a campaign-year marker, saved next to
 the CSV artifact).
 
-This environment has no matplotlib, so the default artifact is a
-dependency-free SVG rendered by hand (same marks: line + point markers
-+ dashed campaign marker + title/axis labels).  When matplotlib IS
-importable the same call yields the reference-style PNG instead.  Only
-ever invoked on an already-collected, driver-side series (≤ ~45 rows
-per the reference working set) — never inside a distributed plan.
+The artifact is a dependency-free SVG rendered by hand, with the same
+marks: line + point markers + dashed campaign marker + title/axis
+labels.  Only ever invoked on an already-collected, driver-side series
+(≤ ~45 rows per the reference working set) — never inside a
+distributed plan.
 """
 
 from __future__ import annotations
 
 import html
 from collections.abc import Sequence
-
-try:  # pragma: no cover - matplotlib absent in this environment
-    import matplotlib
-
-    matplotlib.use("Agg")
-    import matplotlib.pyplot as plt
-
-    _HAVE_MPL = True
-except Exception:  # noqa: BLE001
-    _HAVE_MPL = False
 
 
 def _svg_chart(
@@ -133,27 +122,14 @@ def save_series_chart(
     width: int = 640,
     height: int = 400,
 ) -> str:
-    """Save the series chart; returns the path actually written.
+    """Save the series chart as SVG; returns the path written.
 
-    ``path_base`` carries no extension — ``.png`` (matplotlib) or
-    ``.svg`` (fallback renderer) is appended here.  Raises ValueError
-    on an empty series (callers guard with the nonempty check first).
+    ``path_base`` carries no extension — ``.svg`` is appended here.
+    Raises ValueError on an empty series (callers check for rows first).
     """
     if not points:
         raise ValueError("cannot chart an empty series")
     points = sorted((float(x), float(y)) for x, y in points)
-    if _HAVE_MPL:  # pragma: no cover - absent in this environment
-        fig, ax = plt.subplots(figsize=(width / 100, height / 100))
-        ax.plot([p[0] for p in points], [p[1] for p in points], marker="o")
-        if campaign_year is not None:
-            ax.axvline(campaign_year, color="red", linestyle="--", alpha=0.7)
-        ax.set_title(title)
-        ax.set_xlabel("year")
-        ax.set_ylabel("coverage (%)")
-        out = path_base + ".png"
-        fig.savefig(out, dpi=100)
-        plt.close(fig)
-        return out
     out = path_base + ".svg"
     with open(out, "w", encoding="utf-8") as fh:
         fh.write(_svg_chart(points, title, campaign_year, width, height))

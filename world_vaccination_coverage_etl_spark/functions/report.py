@@ -100,15 +100,6 @@ def chart_graphics_ops(
     return "\n".join(ops)
 
 
-def render_pdf(lines: Sequence[str]) -> bytes:
-    """Render text lines into a single minimal PDF (paginated)."""
-    pages = [
-        list(lines[i : i + _LINES_PER_PAGE])
-        for i in range(0, max(len(lines), 1), _LINES_PER_PAGE)
-    ] or [[]]
-    return render_pdf_pages(pages)
-
-
 def render_pdf_pages(
     pages: Sequence[Sequence[str]],
     graphics: dict[int, str] | None = None,

@@ -81,39 +81,10 @@ def exact_dedup_pairs(
 # shingles / tokens (row-local building blocks)
 
 
-def _tokens(col: F.Column) -> F.Column:
-    # filter() lambda kept deliberately: the HOF is non-cheap to
-    # CollapseProject, so the tokenizer is not inlined into the
-    # multiple references _shingles makes (see text.py:_tokens for the
-    # measured 3-4x regression the plain-expression form caused)
-    toks = F.split(normalized_text(col), r"[^a-z0-9]+")
-    return F.filter(toks, lambda t: t != "")
-
-
-def _shingles(col: F.Column, k: int) -> F.Column:
-    """Word k-shingles as an array<string> — pure-JVM expression form.
-
-    ``transform(sequence(0, n-k), i -> concat_ws(' ', slice(tokens, i+1, k)))``
-    then distinct.  Documents shorter than k words fall back to their
-    full token join (single shingle) so they still participate.
-
-    NOTE: higher-order functions are interpreted (no codegen) and this
-    nested form measured ~70 ms/row — use ``shingles_udf`` (Arrow
-    batch, ~1000× faster) anywhere shingles are materialized at scale.
-    Kept for inline/oracle-parity documentation: both forms produce the
-    same set.
-    """
-    toks = _tokens(col)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    sh = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)))
-    return F.array_distinct(F.when(n > 0, sh).otherwise(F.array()))
-
-
 def shingles_udf(k: int):
     """Arrow-batched word k-shingle kernel (distinct, order-free).
 
-    Tokenization matches ``_shingles`` / the DuckDB oracle exactly:
+    Tokenization matches the DuckDB oracle exactly:
     lowercase, split on runs of non-[a-z0-9], drop empties; docs
     shorter than k words contribute their full token join.  Output
     order is irrelevant downstream (array_intersect / array_union /
@@ -180,8 +151,8 @@ def _minhash_coeffs(num_hashes: int, bands: int, seed: int):
 def _minhash_band_hashes(texts: pd.Series) -> pd.Series:
     """Per-document LSH band hashes — one Arrow-batched numpy kernel.
 
-    Pipeline per doc: word trigram shingles (same normalization as the
-    JVM ``_shingles`` expression) → 64-bit base hash per shingle (md5
+    Pipeline per doc: word trigram shingles (same normalization as
+    ``shingles_udf``) → 64-bit base hash per shingle (md5
     prefix, process-stable) → 64 multiply-shift minhashes (vectorized
     ``min`` over the shingle axis) → 16 band hashes (multiply-shift
     over each 4-minhash slice).  Empty docs yield NULL (filtered out).
@@ -1380,27 +1351,11 @@ def simhash_md5_near_dup_pairs(
 # embedding cosine near-dup
 
 
-def _cosine(a: F.Column, b: F.Column) -> F.Column:
-    """Row-local JVM cosine (zip_with/aggregate HOFs).
-
-    NOTE: Catalyst interprets higher-order functions (no codegen) and
-    re-evaluates each aggregate per reference — measured ~100 µs/pair
-    at dim 64.  Fine for O(k)/O(n) scoring; on candidate-pair VERIFY
-    volumes use ``_cosine_pairs_udf`` (Arrow batch + one numpy matmul,
-    ~1000× faster per pair)."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
-
-
 @F.pandas_udf(T.DoubleType())
 def _cosine_pairs_udf(va: pd.Series, vb: pd.Series) -> pd.Series:
     """Vectorized pairwise cosine: one Arrow batch in, one ndarray out.
 
-    Zero/empty/NULL vectors score 0.0, matching ``_cosine``.
+    Zero/empty/NULL vectors score 0.0.
     """
     import numpy as np
 

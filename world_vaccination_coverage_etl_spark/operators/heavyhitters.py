@@ -102,24 +102,3 @@ def misra_gries_summary(
         final_prune, schema="key string, est long"
     )
     return out.select(F.col("key").alias(key_col), "est")
-
-
-def heavy_hitters(
-    df: DataFrame, key_col: str, k: int = 64
-) -> DataFrame:
-    """Two-pass production heavy-hitter pipeline.
-
-    Pass 1: Misra–Gries candidates (every key above ``n/(k+1)`` is
-    guaranteed present).  Pass 2: EXACT counts for the candidate set
-    only — a groupBy whose key space is ≤ k, i.e. broadcast-sized,
-    instead of the full cardinality.  Returns
-    ``(key_col, exact_count)`` for candidates, exact and
-    partitioning-independent for every key above the guarantee bar.
-    """
-    cands = misra_gries_summary(df, key_col, k=k).select(key_col)
-    keyed = df.select(F.col(key_col).cast("string").alias(key_col)).na.drop()
-    return (
-        keyed.join(F.broadcast(cands), on=key_col, how="left_semi")
-        .groupBy(key_col)
-        .agg(F.count(F.lit(1)).cast("long").alias("exact_count"))
-    )

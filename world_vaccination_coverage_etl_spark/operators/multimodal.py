@@ -113,8 +113,7 @@ def decode_image_batch(
 
     Real decode, tiered by availability (``fake=False``):
 
-    - **PIL importable ON THE EXECUTOR** (optional-dependency pattern,
-      mirrors ``functions/chart.py``'s matplotlib handling): every
+    - **PIL importable ON THE EXECUTOR** (optional dependency): every
       format routes through PIL's C decoder — on baseline PNGs it is
       value-identical to the stdlib codec (parity-pinned) and orders
       of magnitude faster (ADVICE r7: never run a Python unfilter

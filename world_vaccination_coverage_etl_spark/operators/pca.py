@@ -1,23 +1,18 @@
-"""Distributed PCA building blocks over embedding columns.
+"""Distributed covariance of an embedding column, the data-parallel
+half of PCA.
 
-PCA at corpus scale factors into two very differently-sized problems:
+The covariance matrix needs a full pass over every vector, but the
+result is only ``dim × dim`` (64×64 = 4096 entries here).  An Arrow
+kernel folds each partition's batch into per-batch partial sums
+(``nᵦ``, ``Σx``, ``Σx xᵀ`` — the same moment decomposition every
+map-side-combine aggregate uses), emits them as (i, j, s_xx, s_x_i,
+s_x_j, n) rows, and ONE tiny shuffle on the (i, j) key finishes the
+reduction.  No vector ever crosses the network; traffic is
+O(partitions · dim²).  The eigendecomposition that completes PCA is
+model-sized driver math on that matrix; this module stops at the matrix.
 
-1. the **covariance matrix** — a full pass over every vector, but the
-   result is only ``dim × dim`` (64×64 = 4096 doubles here).  This is
-   the distributed part: an Arrow kernel folds each partition's batch
-   into per-batch partial sums (``nᵦ``, ``Σx``, ``Σx xᵀ`` — the same
-   moment decomposition every map-side-combine aggregate uses), emits
-   them as (i, j, s_xx, s_x_i, s_x_j, n) rows, and ONE tiny shuffle on
-   the (i, j) key finishes the reduction.  No vector ever crosses the
-   network; traffic is O(partitions · dim²).
-2. the **eigendecomposition** — numpy on the driver over the 4096-entry
-   matrix.  Model-sized math, exactly like the k×dim k-means update
-   (operators/clustering.py): collecting it is not a collect()
-   anti-pattern because it IS the model.
-
-``embedding_covariance`` returns the (i, j, cov) DataFrame (population
-covariance, lower+upper both present — the full matrix), and
-``pca_top_components`` finishes with eigh on the driver.
+``embedding_covariance_fixedpoint`` returns the full (i, j) matrix
+(lower and upper halves) on an exact integer contract.
 """
 
 from __future__ import annotations
@@ -29,69 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-_PARTIAL_SCHEMA = T.StructType(
-    [
-        T.StructField("i", T.IntegerType()),
-        T.StructField("j", T.IntegerType()),
-        T.StructField("s_xx", T.DoubleType()),
-        T.StructField("s_x_i", T.DoubleType()),
-        T.StructField("s_x_j", T.DoubleType()),
-        T.StructField("n", T.LongType()),
-    ]
-)
-
-
-def embedding_covariance(
-    df: DataFrame, vec_col: str = "embedding", dim: int = 64, round_dp: int = 6
-) -> DataFrame:
-    """Population covariance matrix of a vector column as (i, j, cov) rows.
-
-    Arrow-batched partial moments per partition (one ``dim × dim``
-    matmul per batch via numpy), then one shuffle of O(partitions·dim²)
-    tiny rows.  ``cov = Σxixj/n − (Σxi/n)(Σxj/n)`` assembled AFTER the
-    global reduction so partial batches merge exactly.
-    """
-
-    def moments(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n = m.shape[0]
-            s1 = m.sum(axis=0)
-            s2 = m.T @ m
-            ii, jj = np.meshgrid(range(dim), range(dim), indexing="ij")
-            yield pd.DataFrame(
-                {
-                    "i": ii.ravel().astype("int32"),
-                    "j": jj.ravel().astype("int32"),
-                    "s_xx": s2.ravel(),
-                    "s_x_i": s1[ii.ravel()],
-                    "s_x_j": s1[jj.ravel()],
-                    "n": np.full(dim * dim, n, dtype="int64"),
-                }
-            )
-
-    partial = df.select(vec_col).mapInPandas(moments, _PARTIAL_SCHEMA)
-    tot = partial.groupBy("i", "j").agg(
-        F.sum("s_xx").alias("s_xx"),
-        F.sum("s_x_i").alias("s_x_i"),
-        F.sum("s_x_j").alias("s_x_j"),
-        F.sum("n").alias("n"),
-    )
-    return tot.select(
-        "i",
-        "j",
-        F.round(
-            F.col("s_xx") / F.col("n")
-            - (F.col("s_x_i") / F.col("n")) * (F.col("s_x_j") / F.col("n")),
-            round_dp,
-        ).alias("cov"),
-    )
-
 
 _FP_PARTIAL_SCHEMA = T.StructType(
     [
@@ -141,10 +73,7 @@ def embedding_covariance_fixedpoint(
        aggregate — exact rational rounding, no float anywhere.
 
     ``cov_micro`` is the population covariance of the scale-quantized
-    values in micro-units (divide by 1e6 for the float view).  Same
-    distributed shape as :func:`embedding_covariance`: per-batch Arrow
-    moment kernel, ONE O(partitions·dim²) shuffle, no vector crosses
-    the network.
+    values in micro-units (divide by 1e6 for the float view).
     """
 
     def moments(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -199,34 +128,3 @@ def embedding_covariance_fixedpoint(
             yield out
 
     return tot.mapInPandas(finish, _FP_OUT_SCHEMA)
-
-
-def pca_top_components(
-    df: DataFrame, k: int = 4, vec_col: str = "embedding", dim: int = 64
-):
-    """Top-k principal components from the distributed covariance.
-
-    Returns ``(eigenvalues, components, explained_variance_ratio)`` as
-    numpy arrays — the dim×dim eigenproblem is driver math on the
-    model-sized matrix (no data rows are collected).  Eigenvalues
-    descend; components rows align with them.  Sign convention: each
-    component's largest-magnitude coordinate is made positive so the
-    result is deterministic across LAPACK builds.
-    """
-    import numpy as np
-
-    rows = embedding_covariance(df, vec_col, dim, round_dp=12).collect()
-    cov = np.zeros((dim, dim))
-    for r in rows:
-        cov[r.i, r.j] = r.cov
-    vals, vecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(vals)[::-1][:k]
-    vals_k = vals[order]
-    comps = vecs[:, order].T
-    for c in comps:
-        m = np.argmax(np.abs(c))
-        if c[m] < 0:
-            c *= -1.0
-    total = float(vals.clip(min=0).sum())
-    ratio = vals_k / total if total > 0 else np.zeros_like(vals_k)
-    return vals_k, comps, ratio

@@ -1,8 +1,4 @@
-from .pipeline import (
-    melt_wide_to_tidy,
-    clean_immunization,
-    run_etl,
-)
+from .pipeline import run_etl
 from .analytics import (
     cached_dimension_index,
     coverage_series,
@@ -14,8 +10,6 @@ from .analytics import (
 )
 
 __all__ = [
-    "melt_wide_to_tidy",
-    "clean_immunization",
     "run_etl",
     "cached_dimension_index",
     "coverage_series",

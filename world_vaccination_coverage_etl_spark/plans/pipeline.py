@@ -71,15 +71,16 @@ def _resolve_case_insensitive(df: DataFrame, wanted: str) -> str:
     return lower_to_actual[wanted.lower()]
 
 
-def discover_coverage_columns(df: DataFrame, prefix: str = COVERAGE_PREFIX) -> list[str]:
-    """Measure columns by name prefix; drift-fail when none exist."""
-    cols = [c for c in df.columns if c.startswith(prefix)]
+def discover_coverage_columns(df: DataFrame) -> list[str]:
+    """Measure columns by the ``COVERAGE_PREFIX`` name prefix;
+    drift-fail when none exist."""
+    cols = [c for c in df.columns if c.startswith(COVERAGE_PREFIX)]
     if not cols:
-        raise SchemaDriftError(f"no {prefix}* measure columns found in {df.columns}")
+        raise SchemaDriftError(f"no {COVERAGE_PREFIX}* measure columns found in {df.columns}")
     return cols
 
 
-def melt_wide_to_tidy(df: DataFrame, prefix: str = COVERAGE_PREFIX) -> DataFrame:
+def melt_wide_to_tidy(df: DataFrame) -> DataFrame:
     """Wide → long unpivot: the signature reshape (SURVEY §2.3).
 
     Uses Spark's native ``unpivot`` (Catalyst Expand — one pass, no
@@ -90,7 +91,7 @@ def melt_wide_to_tidy(df: DataFrame, prefix: str = COVERAGE_PREFIX) -> DataFrame
     """
     entity_col = _resolve_case_insensitive(df, "entity")
     year_col = _resolve_case_insensitive(df, "year")
-    coverage_cols = discover_coverage_columns(df, prefix)
+    coverage_cols = discover_coverage_columns(df)
 
     tidy = df.unpivot(
         ids=[entity_col, year_col],
@@ -219,19 +220,14 @@ def check_written_rows(path: str, rows_written: int) -> None:
         )
 
 
-def run_etl(
-    spark: SparkSession,
-    csv_path: str,
-    warehouse_dir: str,
-    partition_by: list[str] | None = None,
-) -> DataFrame:
+def run_etl(spark: SparkSession, csv_path: str, warehouse_dir: str) -> DataFrame:
     """Full ETL: staging CSV → raw + clean warehouse tables.
 
     Returns the clean DataFrame, read back lazily from the warehouse so
-    callers see exactly what was persisted.  ``partition_by`` defaults
-    to ``["antigen"]`` — low cardinality (~15) keeps file counts healthy
-    at any scale and serves the dashboards' (country, antigen)
-    predicates via partition pruning.  With the antigen hash
+    callers see exactly what was persisted.  The clean table is
+    partitioned by ``antigen`` — low cardinality (~15) keeps file
+    counts healthy at any scale and serves the dashboards' (country,
+    antigen) predicates via partition pruning.  With the antigen hash
     partitioning of `clean_immunization` each antigen directory holds
     one file; the trade-off is that the dedup's parallelism is capped
     at the number of antigens (~15), whatever the core count.
@@ -266,7 +262,6 @@ def run_etl(
     new one (`read_run_manifest`): a manifest that exists always
     describes the tables beside it.
     """
-    partition_by = ["antigen"] if partition_by is None else partition_by
     filesystem, root = warehouse_filesystem(warehouse_dir)
     manifest_path = posixpath.join(root, RUN_MANIFEST)
     with suppress(FileNotFoundError):
@@ -285,7 +280,7 @@ def run_etl(
     raw_writer = InheritableThread(write_raw, session=spark, name="run_etl-raw-write")
     raw_writer.start()
     try:
-        out, counts = _load_clean(spark, csv_path, warehouse_dir, partition_by)
+        out, counts = _load_clean(spark, csv_path, warehouse_dir)
         timings["clean_s"] = time.perf_counter() - t0
     except BaseException as e:
         errors.append(e)
@@ -313,7 +308,7 @@ def read_run_manifest(warehouse_dir: str) -> dict:
 
 
 def _load_clean(
-    spark: SparkSession, csv_path: str, warehouse_dir: str, partition_by: list[str]
+    spark: SparkSession, csv_path: str, warehouse_dir: str
 ) -> tuple[DataFrame, dict[str, int]]:
     wide = read_wide_csv_strings(spark, csv_path)
     seen, written = Observation(), Observation()
@@ -321,7 +316,7 @@ def _load_clean(
     tidy = _observe_input(tidy, discover_coverage_columns(wide)[0], seen)
     clean = clean_immunization(tidy).observe(written, F.count(F.lit(1)).alias("rows_written"))
     path = table_path(warehouse_dir, TABLE_CLEAN)
-    write_warehouse_table(clean, warehouse_dir, TABLE_CLEAN, partition_by=partition_by)
+    write_warehouse_table(clean, warehouse_dir, TABLE_CLEAN, partition_by=["antigen"])
     counts, rows_written = seen.get, written.get["rows_written"]
     counts["duplicates_removed"] = counts.pop("rows_kept") - rows_written
     counts["rows_written"] = rows_written

@@ -15,7 +15,7 @@ _DUCK_TOKS = (
     "list_filter(string_split_regex(lower(trim(text)), '[^a-zA-Z0-9]+'),"
     " x -> x <> '')"
 )
-# DuckDB trigram word-shingle CTE mirroring operators.dedup._shingles(k=3)
+# DuckDB trigram word-shingle CTE mirroring operators.dedup.shingles_udf(3)
 _DUCK_SHINGLES = r"""
     toks AS (
       SELECT doc_id, lang,

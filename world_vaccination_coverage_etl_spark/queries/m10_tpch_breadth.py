@@ -6,7 +6,7 @@ registration order is preserved by the package __init__ import order.
 
 from ._core import *  # noqa: F401,F403
 from .m06_text_sampling import _DUCK_SHINGLES, _DUCK_TOKS  # oracle fragments
-from .m07_dedup import _DUCK_SHINGLES_U, _docs_self_union
+from .m07_dedup import _DUCK_SHINGLES_U
 
 # --------------------------------------------------------------------- #
 # TPC-H breadth completion: Q11 / Q12 / Q20 adaptations.  With these the
@@ -1254,8 +1254,7 @@ def q_conversion_latency_percentiles(spark, sf_dir):
     "= round_half_away(1e6·(n·Σqq−ΣqΣq)/(n²·scale²)) via exact "
     "arbitrary-precision integer math over the dim²-row aggregate; the "
     "oracle rebuilds the identical integer contract with HUGEINT.  "
-    "Traffic O(partitions·dim²); driver-side eigh (pca_top_components) "
-    "stays pytest-pinned",
+    "Traffic O(partitions·dim²)",
 )
 def q_embedding_covariance(spark, sf_dir):
     from ..operators.pca import embedding_covariance_fixedpoint

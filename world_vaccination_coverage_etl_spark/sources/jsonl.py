@@ -1,16 +1,14 @@
-"""JSONL (newline-delimited JSON) export / import.
+"""JSONL (newline-delimited JSON) export.
 
 The handoff format of LLM training pipelines: one JSON object per
 line, schema carried in-band, consumable by any loader.  Spark's
 native ``json`` source IS JSONL (one object per line, partition-
-parallel both ways), so these are thin contracts over it:
-
-- ``write_jsonl``: partition-parallel export (the 100 TB path), or a
-  deterministic single file (coalesce(1) + optional sort) for handoff
-  artifacts small enough to hand to a tokenizer driver;
-- ``read_jsonl``: schema-EXPLICIT read — schema inference over 100 TB
-  of JSON is a full extra scan and can silently widen/narrow types
-  between runs, so the contract requires the caller to declare it.
+parallel both ways), so ``write_jsonl`` is a thin contract over it: a
+partition-parallel export (the 100 TB path), or a deterministic single
+file (coalesce(1) + optional sort) for handoff artifacts small enough
+to hand to a tokenizer driver.  Read it back with an explicit schema
+(``spark.read.schema(ddl).json(path)``): inference over 100 TB of JSON
+is a full extra scan and can widen or narrow types between runs.
 """
 
 from __future__ import annotations
@@ -19,7 +17,7 @@ import glob
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_jsonl(
@@ -46,13 +44,3 @@ def write_jsonl(
     shutil.move(part[0], path)
     shutil.rmtree(staging)
     return path
-
-
-def read_jsonl(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Read JSONL under an explicit schema (DDL string or StructType).
-
-    Corrupt lines surface in the standard ``_corrupt_record`` column
-    when the schema declares it; otherwise they become NULL rows —
-    callers validating ingest should declare it and filter.
-    """
-    return spark.read.schema(schema).json(path)

@@ -28,12 +28,8 @@ minimal auditable form.
 Commits are VERSIONED: every commit also writes an immutable snapshot
 ``_versions/v<N>.json``, and the reader accepts ``option("version",
 N)`` for time travel — reading the table exactly as it was after
-commit N (overwritten files stay on disk until vacuumed, so old
-snapshots remain readable).  :func:`vacuum_jsonl_manifest` deletes
-data files referenced by NO retained snapshot (keep the last
-``retain`` versions) and prunes the expired snapshot files — the
-Delta VACUUM contract in miniature: time travel works back exactly as
-far as retention, never further.
+commit N (an overwrite leaves the replaced files on disk, so old
+snapshots remain readable).
 
 Usage::
 
@@ -41,7 +37,6 @@ Usage::
     spark.read.format("jsonl_manifest").schema(ddl).load(path)
     spark.read.format("jsonl_manifest").schema(ddl)
          .option("version", 1).load(path)          # time travel
-    vacuum_jsonl_manifest(path, retain=2)
 
 JSON values: str/int/float/bool pass through; date/timestamp
 serialize ISO-8601 and are re-parsed on read via the declared read
@@ -279,44 +274,6 @@ def _read_manifest(path: str, version: int | None = None) -> dict | None:
     return m
 
 
-def vacuum_jsonl_manifest(path: str, retain: int = 2) -> dict:
-    """Delete data files unreferenced by the last ``retain`` snapshots.
-
-    Expired snapshot files are pruned too, so time travel fails FAST
-    past retention instead of returning a partially-deleted table.
-    Returns ``{"deleted_files": [...], "deleted_versions": [...]}``.
-    """
-    head = _read_manifest(path)
-    if head is None:
-        return {"deleted_files": [], "deleted_versions": []}
-    vdir = os.path.join(path, "_versions")
-    # pre-versioning table (manifest present, no _versions dir): HEAD is
-    # the only snapshot — nothing to prune, only unreferenced data files
-    versions = sorted(
-        int(f[1:-5]) for f in os.listdir(vdir)
-        if f.startswith("v") and f.endswith(".json")
-    ) if os.path.isdir(vdir) else []
-    keep_versions = set(versions[-retain:])
-    live: set[str] = set()
-    for v in keep_versions:
-        m = _read_manifest(path, v)
-        live.update(e["file"] for e in m["files"])
-    live.update(e["file"] for e in head["files"])  # HEAD always survives
-    deleted_files, deleted_versions = [], []
-    for f in os.listdir(path):
-        if f.endswith(".jsonl") and f not in live:
-            os.remove(os.path.join(path, f))
-            deleted_files.append(f)
-    for v in versions:
-        if v not in keep_versions:
-            os.remove(os.path.join(vdir, f"v{v}.json"))
-            deleted_versions.append(v)
-    return {
-        "deleted_files": sorted(deleted_files),
-        "deleted_versions": deleted_versions,
-    }
-
-
 class _FilePartition(InputPartition):
     def __init__(self, idx: int, fname: str):
         super().__init__(idx)
@@ -403,10 +360,9 @@ class JsonlStreamWriter(DataSourceStreamArrowWriter):
     checkpoint advance, the SAME batchId is replayed.  The batch
     writer's job-level atomicity doesn't cover that (each replay is a
     new job).  Here the manifest itself carries a per-stream high-water
-    mark (``stream_batches[stream_id] = last committed batchId``, the
-    same provenance log ``streaming/manifest_stream.py`` established),
-    and ``commit(messages, batchId)`` is IDEMPOTENT: a replayed batch
-    is detected BEFORE any file moves and dropped wholesale — the
+    mark (``stream_batches[stream_id] = last committed batchId``), and
+    ``commit(messages, batchId)`` is IDEMPOTENT: a replayed batch is
+    detected BEFORE any file moves and dropped wholesale — the
     Delta/Iceberg txn-log trick (sink-side transactional dedup by
     (streamId, batchId)) on the DataSource streaming-write API.
 

@@ -1,16 +1,15 @@
-"""Export sinks + artifact-name helpers.
+"""Artifact-name helper and parquet compaction.
 
-Mirrors the reference's per-series CSV artifact path (reference
-etl_pipeline.py:152-153 ``clean_{country}_{antigen}.csv``, dashboard
-download buttons streamlit_app.py:309-314,476-494): the engine writes
-header'd CSV; naming/templating stays a driver-side concern.
+The reference names its per-series CSV artifacts
+``clean_{country}_{antigen}.csv`` (reference etl_pipeline.py:152-153,
+dashboard download buttons streamlit_app.py:309-314,476-494);
+``sanitize_filename`` is that templating.  The CLI writes the collected
+series rows itself (cli.py).
 """
 
 from __future__ import annotations
 
 import re
-
-from pyspark.sql import DataFrame
 
 
 def sanitize_filename(name: str) -> str:
@@ -19,32 +18,6 @@ def sanitize_filename(name: str) -> str:
     outside ``[A-Za-z0-9._-]``."""
     name = name.replace(" ", "_").replace("/", "-").replace("\\", "-")
     return re.sub(r"[^A-Za-z0-9._-]", "", name)
-
-
-def write_csv(
-    df: DataFrame,
-    path: str,
-    single_file: bool = False,
-    mode: str = "overwrite",
-) -> None:
-    """Header'd CSV export (reference sink_csv, SURVEY §2.1).
-
-    ``single_file=True`` coalesces to one part — only for presentation-
-    edge artifacts (the reference's per-series downloads are ≤ a few
-    hundred rows); large exports keep their natural partitioning.
-    """
-    out = df.coalesce(1) if single_file else df
-    out.write.option("header", True).mode(mode).csv(path)
-
-
-def assert_nonempty(df: DataFrame, context: str = "result") -> DataFrame:
-    """Empty-result guard (reference filter_nonempty_guard, SURVEY §2.2;
-    etl_pipeline.py:120-122): fail fast with a clear message instead of
-    silently producing empty artifacts.  Uses ``isEmpty`` — evaluates
-    at most one partition, no count over the full input."""
-    if df.isEmpty():
-        raise ValueError(f"empty {context}: no rows to export")
-    return df
 
 
 def compact_parquet(

@@ -27,10 +27,10 @@ def write_warehouse_table(
     warehouse_dir: str,
     table: str,
     partition_by: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> str:
+    """Truncate-and-reload ``table``: an overwrite of its parquet dataset."""
     path = table_path(warehouse_dir, table)
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

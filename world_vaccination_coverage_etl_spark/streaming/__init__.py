@@ -1,4 +1,3 @@
-from .refresh import streaming_refresh_available_now
 from .event_windows import (
     tumbling_event_counts,
     sliding_event_counts,
@@ -6,7 +5,6 @@ from .event_windows import (
 )
 
 __all__ = [
-    "streaming_refresh_available_now",
     "tumbling_event_counts",
     "sliding_event_counts",
     "sessionize",
