@@ -165,6 +165,33 @@ def test_dashboard_requires_params(served):
     assert status == 400
 
 
+@pytest.mark.parametrize(
+    "name,value",
+    [
+        # too large for the chart's float()
+        pytest.param("start_year", "9" * 400, id="start_year-400-digits"),
+        ("start_year", "0"),
+        ("start_year", "10000"),
+        ("start_year", "20l7"),
+        pytest.param("pre_years", "9" * 400, id="pre_years-400-digits"),
+        ("pre_years", "-1"),
+        ("post_years", "201"),
+    ],
+)
+def test_dashboard_rejects_out_of_range_window(served, name, value):
+    base = served + "/dashboard?country=Aland&antigen=coverage__bcg"
+    status, body = _get(f"{base}&{name}={value}")
+    assert status == 400
+    assert f"{name} must be an integer in" in body
+
+
+@pytest.mark.parametrize("window", ["start_year=9999&pre_years=200&post_years=200",
+                                    "start_year=1&pre_years=0&post_years=0"])
+def test_dashboard_serves_window_range_ends(served, window):
+    status, _ = _get(served + "/dashboard?country=Aland&antigen=coverage__bcg&" + window)
+    assert status == 200
+
+
 def test_snapshot_path_runs_no_spark_query(spark, clean, monkeypatch):
     app = DashboardApp(spark, clean)
     assert app._snapshot is not None

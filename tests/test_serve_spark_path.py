@@ -15,6 +15,7 @@ from test_serve import (  # noqa: F401  (collected again with this module's `ser
     test_dashboard_kpis_equal_window_compare,
     test_dashboard_missing_series_404,
     test_dashboard_params_change_result,
+    test_dashboard_rejects_out_of_range_window,
     test_dashboard_requires_params,
     test_dashboard_runs_parameterized_query,
     test_index_lists_dimension_pairs,

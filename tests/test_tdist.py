@@ -1,4 +1,4 @@
-"""Golden tests for the pure-numpy Student-t kernels.
+"""Golden tests for the plain-``math`` Student-t kernels.
 
 Published critical values (any statistics table) plus an independent
 check of the CDF against high-resolution numerical integration of the
@@ -66,8 +66,9 @@ def test_symmetry_and_edges():
 
 
 def test_scalar_and_vector_sf_agree_on_both_branches():
-    # betainc_reg evaluates each element on only one continued-fraction
-    # branch; a vector call must give what per-element scalar calls give
+    # the incomplete beta evaluates each element on only one continued-
+    # fraction branch; a vector call must give what per-element scalar
+    # calls give
     ts = np.array([-30.0, -4.0, -1.5, -0.2, 0.0, 0.3, 1.0, 2.2, 5.0, 30.0])
     dfs = np.array([0.5, 1.0, 2.0, 3.5, 9.0, 30.0, 200.0])
     tt, dd = (g.ravel() for g in np.meshgrid(ts, dfs))

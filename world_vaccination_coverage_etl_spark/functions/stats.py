@@ -4,9 +4,9 @@ Design (SURVEY.md §7.1): every statistic is computed from built-in
 distributed aggregates (``avg``, ``var_samp``, ``stddev_samp``,
 ``count``) plus closed-form column math — JVM-side, codegen'd,
 shuffle-once.  Only the t-distribution evaluations (quantile for CI
-half-widths, CDF for p-values) leave the JVM, as vectorized pandas UDFs
-applied to the already-aggregated (one row per group) frame.  That keeps
-Python work at O(groups) regardless of input scale.
+half-widths, CDF for p-values) leave the JVM, as Arrow-batched pandas
+UDFs applied to the already-aggregated (one row per group) frame.  That
+keeps Python work at O(groups) regardless of input scale.
 
 ``series_window_stats`` is the one-series form of the same block: the
 dashboard and the CLI already hold the ≤121-row series (one row per
@@ -38,20 +38,20 @@ from .tdist import t_ppf, t_sf
 
 @F.pandas_udf(T.DoubleType())
 def two_sided_p_udf(t_stat: pd.Series, dof: pd.Series) -> pd.Series:
-    """Two-sided Welch p-value: 2 * P(T_df > |t|).  Arrow-batched."""
+    """Two-sided Welch p-value: 2 * P(T_df > |t|).  Arrow-batched; the
+    scalar ``t_sf`` kernel runs once per row (one row per group)."""
     import numpy as np
 
-    t = t_stat.to_numpy(dtype="float64")
-    d = dof.to_numpy(dtype="float64")
-    p = 2.0 * t_sf(np.abs(t), d)
-    return pd.Series(np.where(np.isnan(t) | np.isnan(d), np.nan, np.clip(p, 0.0, 1.0)))
+    t = np.abs(t_stat.to_numpy(dtype="float64"))
+    return pd.Series(np.clip(2.0 * t_sf(t, dof.to_numpy(dtype="float64")), 0.0, 1.0))
 
 
 @F.pandas_udf(T.DoubleType())
 def t_crit_udf(conf: pd.Series, dof: pd.Series) -> pd.Series:
-    """Two-sided t critical value t_{(1+conf)/2, df}.  Arrow-batched."""
-    q = (1.0 + conf.to_numpy(dtype="float64")) / 2.0
-    return pd.Series(t_ppf(q, dof.to_numpy(dtype="float64")))
+    """Two-sided t critical value t_{(1+conf)/2, df}.  Arrow-batched;
+    each distinct (conf, df) runs ``t_ppf`` once (``_t_crit``)."""
+    pairs = zip(conf.to_numpy(dtype="float64").tolist(), dof.to_numpy(dtype="float64").tolist())
+    return pd.Series([_t_crit(c, d) for c, d in pairs], dtype="float64")
 
 
 @F.pandas_udf(T.DoubleType())
@@ -126,10 +126,23 @@ def mean_ci_columns(
 def _t_crit(conf: float, dof: float) -> float:
     """Two-sided t critical value t_{(1+conf)/2, dof} as a float.
 
-    Memoized: ``series_window_stats`` asks for it twice per call, and
-    its inputs repeat (the window length minus one is a small integer),
-    while one ``t_ppf`` evaluation runs a dozen Halley iterations."""
+    Memoized: ``series_window_stats`` asks for it twice per call and
+    ``t_crit_udf`` once per row, and the dof are integers n - 1 that
+    repeat, while one ``t_ppf`` evaluation runs up to a dozen Halley
+    iterations, each a full incomplete-beta continued fraction."""
     return float(t_ppf((1.0 + conf) / 2.0, dof))
+
+
+def _variance(xs: list[float], mean: float) -> float:
+    """Sample variance about ``mean`` (two-pass, float).
+
+    A constant window has exactly zero variance, as under Spark's
+    ``var_samp``: the rounded mean can sit an ulp off the common value
+    (``fmean([88.1] * 3)`` is 88.09999999999998), which would give a
+    variance of ~1e-28 and a non-NULL t."""
+    if min(xs) == max(xs):
+        return 0.0
+    return math.fsum((x - mean) ** 2 for x in xs) / (len(xs) - 1)
 
 
 def series_window_stats(
@@ -157,13 +170,11 @@ def series_window_stats(
             before.append(float(value))
         elif start_year <= year <= start_year + post_years:
             after.append(float(value))
-    # statistics.variance is exact (rational arithmetic), so a constant
-    # window has exactly zero variance, as under Spark's var_samp.
     n_b, n_a = len(before), len(after)
     avg_b = statistics.fmean(before) if n_b else None
     avg_a = statistics.fmean(after) if n_a else None
-    var_b = statistics.variance(before) if n_b > 1 else None
-    var_a = statistics.variance(after) if n_a > 1 else None
+    var_b = _variance(before, avg_b) if n_b > 1 else None
+    var_a = _variance(after, avg_a) if n_a > 1 else None
     sd_b = math.sqrt(var_b) if var_b is not None else None
     sd_a = math.sqrt(var_a) if var_a is not None else None
 

@@ -138,11 +138,11 @@ Z_975 = 1.9599639845400545
     FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
     """,
     note="t-quantile CI, hash-certified via the approx-gate pattern: mean/n/sem are "
-    "SQL-checked values; the CI bounds (numpy t_ppf kernel, operators/../tdist.py) are "
+    "SQL-checked values; the CI bounds (t_ppf kernel, functions/tdist.py) are "
     "certified through in-plan booleans the oracle asserts literally — the CI must "
     "bracket the mean, and the half-width sem*t_crit must satisfy "
     "z <= t_crit <= z + 5/df (bound validated vs the kernel for df>=5; "
-    "raw-bound numeric fidelity is pinned by scipy-golden tests in tests/test_stats.py)",
+    "the kernel's numeric fidelity is pinned by published-table tests in tests/test_tdist.py)",
 )
 def q_agg_mean_ci_t(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
@@ -306,10 +306,10 @@ def q_agg_welch_t(spark, sf_dir):
     """,
     note="Welch two-sided p-value, hash-certified via the approx-gate pattern: "
     "t_stat/dof are SQL-checked (same closed forms as agg_welch_t); the t-CDF "
-    "p (numpy kernel) is certified through in-plan booleans — p in [0,1] and "
+    "p (t_sf kernel, functions/tdist.py) is certified through in-plan booleans — p in [0,1] and "
     "p_normal <= p <= p_normal + 3/dof where p_normal = erfc(|t|/sqrt(2)) is the "
     "df->inf limit (bracket validated vs the kernel for df>=5, sup gap ~0.32/df; "
-    "raw p + significance labels pinned by scipy-golden tests in tests/test_stats.py)",
+    "the t CDF is pinned against numerical integration in tests/test_tdist.py)",
 )
 def q_agg_welch_pvalue(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")

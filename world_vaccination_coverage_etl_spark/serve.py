@@ -22,7 +22,9 @@ picker page from it once.  Requests then read the snapshot:
   before/after window block from those rows with functions/stats.py
   ``series_window_stats`` (the same statistics as the grouped
   ``window_compare`` plan), and renders functions/dashboard.py's HTML
-  (KPI cards, shaded-window chart, CI bars, policy brief).
+  (KPI cards, shaded-window chart, CI bars, policy brief).  A window
+  parameter that is not an integer in its ``WINDOW_PARAMS`` range gets
+  a 400.
 
 On the snapshot path a request takes no lock and runs no Spark job,
 and the server handles it in its own serving thread once the request
@@ -82,6 +84,17 @@ def _picker_html(pairs: list[tuple[str, str]]) -> str:
     )
 
 
+# The campaign-window query parameters: name -> (default, lowest,
+# highest).  A value that is not an integer in its range gets a 400; a
+# huge one would otherwise overflow the chart's float conversion
+# mid-render.
+WINDOW_PARAMS = {
+    "start_year": (2017, 1, 9999),
+    "pre_years": (5, 0, 200),
+    "post_years": (5, 0, 200),
+}
+
+
 class DashboardApp:
     """Request → series lookup → in-process window statistics → HTML
     render, over a snapshot of ``clean`` taken at construction (or, for
@@ -107,19 +120,20 @@ class DashboardApp:
         return _picker_html(pairs)
 
     def dashboard_page(self, params: dict[str, list[str]]) -> tuple[int, str]:
-        def one(name: str, default: int) -> int:
-            try:
-                return int(params.get(name, [default])[0])
-            except ValueError:
-                return default
-
         country = params.get("country", [""])[0]
         antigen = params.get("antigen", [""])[0]
-        start_year = one("start_year", 2017)
-        pre_years = one("pre_years", 5)
-        post_years = one("post_years", 5)
         if not country or not antigen:
             return 400, "<h1>400</h1><p>country and antigen are required</p>"
+        window = []
+        for name, (default, lo, hi) in WINDOW_PARAMS.items():
+            try:
+                value = int(params.get(name, [default])[0])
+            except ValueError:
+                value = None
+            if value is None or not lo <= value <= hi:
+                return 400, f"<h1>400</h1><p>{name} must be an integer in [{lo}, {hi}]</p>"
+            window.append(value)
+        start_year, pre_years, post_years = window
         if self._snapshot is not None:
             series_rows = self._snapshot.rows(country, antigen)
         else:
