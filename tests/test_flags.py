@@ -8,9 +8,14 @@ error-swallowing white-flag semantics.
 
 from __future__ import annotations
 
+import subprocess
+import sys
+from pathlib import Path
+
 from world_vaccination_coverage_etl_spark.functions.flags import (
     WHITE_FLAG,
     _alpha2_to_flag,
+    country_flag_udf,
     country_to_flag,
 )
 from world_vaccination_coverage_etl_spark.functions.iso3166 import NAME_TO_ALPHA2
@@ -82,3 +87,20 @@ def test_alpha2_passthrough_and_white_flag_fallback():
 def test_flag_codepoints():
     flag = country_to_flag("Japan")
     assert [ord(c) - 0x1F1E6 for c in flag] == [ord("J") - 65, ord("P") - 65]
+
+
+def test_importing_functions_emits_no_user_warning():
+    """The flag UDF names its eval type, so building it at import time
+    raises no ``Cannot infer the eval type from type hints`` warning."""
+    proc = subprocess.run(
+        [sys.executable, "-W", "error::UserWarning", "-c",
+         "import world_vaccination_coverage_etl_spark.functions"],
+        cwd=Path(__file__).resolve().parent.parent, capture_output=True, text=True,
+    )
+    assert proc.returncode == 0, proc.stderr
+
+
+def test_flag_udf_is_a_batched_python_udf():
+    from pyspark.util import PythonEvalType
+
+    assert country_flag_udf.evalType == PythonEvalType.SQL_BATCHED_UDF

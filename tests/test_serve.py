@@ -280,25 +280,18 @@ def test_app_keeps_serving_its_snapshot_after_refresh(spark, tmp_path):
 
 def test_interactive_series_html_fragment():
     """The plotly-parity surface (reference streamlit_app.py:254-308):
-    static SVG marks identical to _svg_chart, embedded JSON data, and
-    the vanilla-JS hover/zoom/pan/reset handlers."""
+    the static SVG's marks, embedded JSON data, and the vanilla-JS
+    hover/zoom/pan/reset handlers."""
     import json
 
-    from world_vaccination_coverage_etl_spark.functions.chart import (
-        _svg_chart,
-        interactive_series_html,
-    )
+    from world_vaccination_coverage_etl_spark.functions.chart import SeriesChart
 
     pts = [(2000, 80.0), (2001, 85.5), (2002, 70.25)]
     wins = [(2000, 2001, "#1f77b4"), (2001, 2002, "#ff7f0e")]
-    frag = interactive_series_html(
-        pts, "A <Title> & more", campaign_year=2001, windows=wins
-    )
-    # every static mark of the non-interactive renderer is present
-    static = _svg_chart(
-        [(float(x), float(y)) for x, y in pts],
-        "A <Title> & more", 2001.0, 720, 360, wins,
-    )
+    chart = SeriesChart(pts, "A <Title> & more", 720, 360)
+    frag = chart.interactive_html(campaign_year=2001, windows=wins)
+    # every static mark of the non-interactive form is present
+    static = chart.svg(2001.0, wins)
     inner = static[static.index(">") + 1 : static.rindex("</svg>")]
     assert inner in frag
     # embedded data round-trips
@@ -317,7 +310,7 @@ def test_interactive_series_html_fragment():
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
-        interactive_series_html([])
+        SeriesChart([], "", 720, 360)
 
 
 def test_dashboard_embeds_interactive_chart(tmp_path):
@@ -339,3 +332,61 @@ def test_dashboard_embeds_interactive_chart(tmp_path):
     )
     assert "data-chart=" in body and "<script>" in body
     assert "dblclick" in body  # zoom-reset handler shipped
+
+
+def _window_params(country, antigen, start, pre, post) -> dict[str, list[str]]:
+    return {"country": [country], "antigen": [antigen], "start_year": [str(start)],
+            "pre_years": [str(pre)], "post_years": [str(post)]}
+
+
+def test_series_view_memo_keeps_no_window_state(spark, clean):
+    """A pair served with window A, then B, then A again reads the same
+    as a page rendered from scratch for each window, also for a series
+    of a single year."""
+    from world_vaccination_coverage_etl_spark.functions.dashboard import (
+        render_dashboard_html,
+    )
+    from world_vaccination_coverage_etl_spark.functions.stats import series_window_stats
+    from world_vaccination_coverage_etl_spark.plans.analytics import coverage_series
+
+    solo = clean.sparkSession.createDataFrame(
+        [("Solo", "coverage__bcg", 2015, 91.5)], schema=clean.schema
+    )
+    fact = clean.unionByName(solo)
+    app = DashboardApp(spark, fact)
+    for country, antigen in (("Aland", "coverage__bcg"), ("Solo", "coverage__bcg")):
+        rows = [(r["year"], r["coverage_pct"])
+                for r in coverage_series(fact, country, antigen).collect()]
+        for window in ((2017, 5, 5), (2014, 3, 2), (2017, 5, 5)):
+            status, body = app.dashboard_page(_window_params(country, antigen, *window))
+            stats = series_window_stats(rows, *window)
+            assert status == 200
+            assert body == render_dashboard_html(country, antigen, rows, stats, *window)
+    assert app._series_view.cache_info().misses == 2
+    assert app._series_view.cache_info().hits == 4
+
+
+def test_series_view_memo_is_bounded(spark, clean, monkeypatch):
+    from world_vaccination_coverage_etl_spark.functions.dashboard import _fmt, _kpi
+    from world_vaccination_coverage_etl_spark.plans.analytics import window_compare
+
+    monkeypatch.setattr(serve, "SERIES_VIEWS_MAX", 2)
+    app = DashboardApp(spark, clean)
+    pairs = [("Aland", "coverage__bcg"), ("Aland", "coverage__dtp3"),
+             ("Borland", "coverage__bcg"), ("Aland", "coverage__bcg")]
+    for country, antigen in pairs:
+        status, body = app.dashboard_page(_window_params(country, antigen, 2017, 5, 5))
+        assert status == 200
+        assert app._series_view.cache_info().currsize <= 2
+        want = window_compare(
+            clean.filter((clean.country == country) & (clean.antigen == antigen)),
+            2017, 5, 5,
+        ).collect()[0]
+        assert _kpi("avg before", _fmt(want.avg_before, "%")) in body
+        assert _kpi("avg after", _fmt(want.avg_after, "%")) in body
+        assert _kpi("p-value", _fmt(want.p_value, "", 4)) in body
+    # the first pair was evicted before it came back
+    assert app._series_view.cache_info().misses == 4
+    # an unknown pair is a 404 and takes no slot
+    assert app.dashboard_page(_window_params("Nowhere", "coverage__bcg", 2017, 5, 5))[0] == 404
+    assert app._series_view.cache_info().misses == 4

@@ -8,110 +8,197 @@ marks: line + point markers + dashed campaign marker + title/axis
 labels.  Only ever invoked on an already-collected, driver-side series
 (≤ ~45 rows per the reference working set) — never inside a
 distributed plan.
+
+`SeriesChart` is the one renderer.  It builds the marks that depend
+only on the series once (scales, head, gridlines and axis labels, line,
+markers, the interactive form's JSON points and title); `svg` and
+`interactive_html` add one request's shaded windows and campaign
+marker.  The CLI's `.svg` artifact (`save_series_chart`) and the
+dashboard's interactive chart both go through it, and the dashboard
+server keeps one per served pair (functions/dashboard.py `SeriesView`).
 """
 
 from __future__ import annotations
 
 import html
+import json
 from collections.abc import Sequence
 
 
-def _svg_chart(
-    points: Sequence[tuple[float, float]],
-    title: str,
-    campaign_year: float | None,
-    width: int,
-    height: int,
-    windows: Sequence[tuple[float, float, str]] | None = None,
-) -> str:
-    """``windows``: optional shaded x-ranges (x_from, x_to, css_color) —
-    the before/after campaign vrects of the reference dashboard
-    (reference streamlit_app.py:254-308)."""
-    ml, mr, mt, mb = 56, 16, 40, 44  # margins
-    pw, ph = width - ml - mr, height - mt - mb
-    xs = [float(p[0]) for p in points]
-    ys = [float(p[1]) for p in points]
-    x0, x1 = min(xs), max(xs)
-    y0, y1 = min(ys), max(ys)
-    if x1 == x0:
-        x0, x1 = x0 - 0.5, x1 + 0.5
-    if y1 == y0:
-        y0, y1 = y0 - 1.0, y1 + 1.0
-    # pad the value range 5% so the line doesn't hug the frame
-    pad = 0.05 * (y1 - y0)
-    y0, y1 = y0 - pad, y1 + pad
+class SeriesChart:
+    """One series' chart, with every mark that depends only on the
+    series built once: the scales, the SVG head (background, title,
+    frame), the gridlines and axis labels, the polyline, the markers,
+    and the escaped JSON ``points``/``title`` of the interactive form.
+    `svg` and `interactive_html` then add a request's shaded windows,
+    its campaign marker and the JSON ``campaign``/``windows``.
 
-    def sx(x: float) -> float:
-        return ml + (x - x0) / (x1 - x0) * pw
+    ``points`` are sorted into (x, y) float pairs here.  Raises
+    ValueError on an empty series (callers check for rows first)."""
 
-    def sy(y: float) -> float:
-        return mt + ph - (y - y0) / (y1 - y0) * ph
+    def __init__(
+        self,
+        points: Sequence[tuple[float, float]],
+        title: str,
+        width: int,
+        height: int,
+    ):
+        if not points:
+            raise ValueError("cannot chart an empty series")
+        pts = sorted((float(x), float(y)) for x, y in points)
+        ml, mr, mt, mb = 56, 16, 40, 44  # margins
+        pw, ph = width - ml - mr, height - mt - mb
+        xs = [x for x, _y in pts]
+        ys = [y for _x, y in pts]
+        x0, x1 = min(xs), max(xs)
+        y0, y1 = min(ys), max(ys)
+        if x1 == x0:
+            x0, x1 = x0 - 0.5, x1 + 0.5
+        if y1 == y0:
+            y0, y1 = y0 - 1.0, y1 + 1.0
+        # pad the value range 5% so the line doesn't hug the frame
+        pad = 0.05 * (y1 - y0)
+        y0, y1 = y0 - pad, y1 + pad
+        self._ml, self._pw, self._mt, self._ph = ml, pw, mt, ph
+        self._x0, self._x1 = x0, x1
+        sx = self._sx
 
-    parts = [
-        f'<svg xmlns="http://www.w3.org/2000/svg" width="{width}" '
-        f'height="{height}" viewBox="0 0 {width} {height}">',
-        f'<rect width="{width}" height="{height}" fill="white"/>',
-        f'<text x="{width / 2:.1f}" y="22" text-anchor="middle" '
-        f'font-family="sans-serif" font-size="14" font-weight="bold">'
-        f"{html.escape(title)}</text>",
-        # frame
-        f'<rect x="{ml}" y="{mt}" width="{pw}" height="{ph}" fill="none" '
-        'stroke="#888" stroke-width="1"/>',
-    ]
-    # shaded campaign windows (behind gridlines and the series)
-    for wx0, wx1, color in windows or ():
-        cx0, cx1 = max(float(wx0), x0), min(float(wx1), x1)
-        if cx1 <= cx0:
-            continue
-        parts.append(
-            f'<rect x="{sx(cx0):.1f}" y="{mt}" '
-            f'width="{sx(cx1) - sx(cx0):.1f}" height="{ph}" '
-            f'fill="{color}" fill-opacity="0.15"/>'
+        def sy(y: float) -> float:
+            return mt + ph - (y - y0) / (y1 - y0) * ph
+
+        svg_attrs = (
+            f'xmlns="http://www.w3.org/2000/svg" width="{width}" '
+            f'height="{height}" viewBox="0 0 {width} {height}"'
         )
-    # y gridlines + labels (4 ticks)
-    for i in range(5):
-        yv = y0 + (y1 - y0) * i / 4
-        yy = sy(yv)
-        parts.append(
-            f'<line x1="{ml}" y1="{yy:.1f}" x2="{ml + pw}" y2="{yy:.1f}" '
-            'stroke="#ddd" stroke-width="0.5"/>'
+        self._open = f"<svg {svg_attrs}>"
+        self._head = "\n".join([
+            f'<rect width="{width}" height="{height}" fill="white"/>',
+            f'<text x="{width / 2:.1f}" y="22" text-anchor="middle" '
+            f'font-family="sans-serif" font-size="14" font-weight="bold">'
+            f"{html.escape(title)}</text>",
+            # frame
+            f'<rect x="{ml}" y="{mt}" width="{pw}" height="{ph}" fill="none" '
+            'stroke="#888" stroke-width="1"/>',
+        ])
+        # y gridlines + labels (4 ticks), drawn over the shaded windows
+        grid = []
+        for i in range(5):
+            yv = y0 + (y1 - y0) * i / 4
+            yy = sy(yv)
+            grid.append(
+                f'<line x1="{ml}" y1="{yy:.1f}" x2="{ml + pw}" y2="{yy:.1f}" '
+                'stroke="#ddd" stroke-width="0.5"/>'
+            )
+            grid.append(
+                f'<text x="{ml - 6}" y="{yy + 4:.1f}" text-anchor="end" '
+                f'font-family="sans-serif" font-size="10">{yv:.1f}</text>'
+            )
+        # x labels: first, middle, last
+        for xv in {x0, (x0 + x1) / 2, x1}:
+            grid.append(
+                f'<text x="{sx(xv):.1f}" y="{mt + ph + 16}" text-anchor="middle" '
+                f'font-family="sans-serif" font-size="10">{xv:.0f}</text>'
+            )
+        self._grid = "\n".join(grid)
+        # the series line + markers, drawn over the campaign marker
+        line = " ".join(f"{sx(x):.1f},{sy(y):.1f}" for x, y in pts)
+        tail = [
+            f'<polyline points="{line}" fill="none" stroke="#2c6fbb" stroke-width="2"/>'
+        ]
+        for x, y in pts:
+            tail.append(
+                f'<circle cx="{sx(x):.1f}" cy="{sy(y):.1f}" r="2.5" fill="#2c6fbb"/>'
+            )
+        tail.append(
+            f'<text x="{width / 2:.1f}" y="{height - 8}" text-anchor="middle" '
+            'font-family="sans-serif" font-size="11">year</text>'
         )
-        parts.append(
-            f'<text x="{ml - 6}" y="{yy + 4:.1f}" text-anchor="end" '
-            f'font-family="sans-serif" font-size="10">{yv:.1f}</text>'
+        self._tail = "\n".join(tail)
+        # the interactive form's JSON config in the key order of one
+        # json.dumps(dict); html.escape maps one character at a time, so
+        # the escaped pieces join to the escaped whole
+        self._interactive_open = f"<svg {svg_attrs} data-chart='" + html.escape(
+            '{"points": ' + json.dumps([[x, y] for x, y in pts])
+            + ', "title": ' + json.dumps(html.escape(title))
+            + ', "campaign": '
         )
-    # x labels: first, middle, last
-    for xv in {x0, (x0 + x1) / 2, x1}:
-        parts.append(
-            f'<text x="{sx(xv):.1f}" y="{mt + ph + 16}" text-anchor="middle" '
-            f'font-family="sans-serif" font-size="10">{xv:.0f}</text>'
+        self._cfg_mid = html.escape(
+            f', "w": {json.dumps(width)}, "h": {json.dumps(height)}'
+            f', "x0": {json.dumps(pts[0][0])}, "x1": {json.dumps(pts[-1][0])}'
+            f', "y0": {json.dumps(min(ys))}, "y1": {json.dumps(max(ys))}'
+            ', "windows": '
         )
-    # campaign marker
-    if campaign_year is not None and x0 <= campaign_year <= x1:
-        cx = sx(campaign_year)
-        parts.append(
-            f'<line x1="{cx:.1f}" y1="{mt}" x2="{cx:.1f}" y2="{mt + ph}" '
-            'stroke="#c0392b" stroke-width="1.5" stroke-dasharray="5,4"/>'
+
+    def _sx(self, x: float) -> float:
+        return self._ml + (x - self._x0) / (self._x1 - self._x0) * self._pw
+
+    def _marks(
+        self,
+        campaign_year: float | None,
+        windows: Sequence[tuple[float, float, str]] | None,
+    ) -> str:
+        """Every mark between the <svg> tags, in drawing order."""
+        sx, mt, ph, x0, x1 = self._sx, self._mt, self._ph, self._x0, self._x1
+        parts = [self._head]
+        # shaded campaign windows (behind gridlines and the series)
+        for wx0, wx1, color in windows or ():
+            cx0, cx1 = max(float(wx0), x0), min(float(wx1), x1)
+            if cx1 <= cx0:
+                continue
+            parts.append(
+                f'<rect x="{sx(cx0):.1f}" y="{mt}" '
+                f'width="{sx(cx1) - sx(cx0):.1f}" height="{ph}" '
+                f'fill="{color}" fill-opacity="0.15"/>'
+            )
+        parts.append(self._grid)
+        # campaign marker
+        if campaign_year is not None and x0 <= campaign_year <= x1:
+            cx = sx(campaign_year)
+            parts.append(
+                f'<line x1="{cx:.1f}" y1="{mt}" x2="{cx:.1f}" y2="{mt + ph}" '
+                'stroke="#c0392b" stroke-width="1.5" stroke-dasharray="5,4"/>'
+            )
+            parts.append(
+                f'<text x="{cx + 4:.1f}" y="{mt + 12}" font-family="sans-serif" '
+                f'font-size="10" fill="#c0392b">campaign {campaign_year:.0f}</text>'
+            )
+        parts.append(self._tail)
+        return "\n".join(parts)
+
+    def svg(
+        self,
+        campaign_year: float | None = None,
+        windows: Sequence[tuple[float, float, str]] | None = None,
+    ) -> str:
+        """The static SVG document.  ``windows``: optional shaded
+        x-ranges (x_from, x_to, css_color) — the before/after campaign
+        vrects of the reference dashboard (reference
+        streamlit_app.py:254-308)."""
+        return f"{self._open}\n{self._marks(campaign_year, windows)}\n</svg>"
+
+    def interactive_html(
+        self,
+        campaign_year: float | None = None,
+        windows: Sequence[tuple[float, float, str]] | None = None,
+    ) -> str:
+        """The chart as an INTERACTIVE embeddable HTML fragment — the
+        reference dashboard's plotly hover/zoom/pan surface (reference
+        streamlit_app.py:254-308) without any charting library: the
+        marks of `svg` (so non-JS consumers and the pytest pins see the
+        same marks) inside an <svg data-chart=...> whose embedded JSON
+        the ~150-line vanilla-JS `_CHART_JS` re-draws on interaction.
+
+        Interactions (plotly parity for the reference's usage):
+        nearest-point hover tooltip with crosshair, wheel zoom anchored
+        at the cursor (clamped to the data range), drag pan,
+        double-click reset."""
+        wins = [[float(a), float(b), c] for a, b, c in (windows or [])]
+        return (
+            f"{self._interactive_open}{html.escape(json.dumps(campaign_year))}"
+            f"{self._cfg_mid}{html.escape(json.dumps(wins))}}}' "
+            f'style="cursor:crosshair">\n{self._marks(campaign_year, windows)}\n'
+            f"</svg>\n<script>{_CHART_JS}</script>"
         )
-        parts.append(
-            f'<text x="{cx + 4:.1f}" y="{mt + 12}" font-family="sans-serif" '
-            f'font-size="10" fill="#c0392b">campaign {campaign_year:.0f}</text>'
-        )
-    # the series line + markers
-    pts = " ".join(f"{sx(x):.1f},{sy(y):.1f}" for x, y in zip(xs, ys))
-    parts.append(
-        f'<polyline points="{pts}" fill="none" stroke="#2c6fbb" stroke-width="2"/>'
-    )
-    for x, y in zip(xs, ys):
-        parts.append(
-            f'<circle cx="{sx(x):.1f}" cy="{sy(y):.1f}" r="2.5" fill="#2c6fbb"/>'
-        )
-    parts.append(
-        f'<text x="{width / 2:.1f}" y="{height - 8}" text-anchor="middle" '
-        'font-family="sans-serif" font-size="11">year</text>'
-    )
-    parts.append("</svg>")
-    return "\n".join(parts)
 
 
 def save_series_chart(
@@ -127,12 +214,10 @@ def save_series_chart(
     ``path_base`` carries no extension — ``.svg`` is appended here.
     Raises ValueError on an empty series (callers check for rows first).
     """
-    if not points:
-        raise ValueError("cannot chart an empty series")
-    points = sorted((float(x), float(y)) for x, y in points)
+    svg = SeriesChart(points, title, width, height).svg(campaign_year)
     out = path_base + ".svg"
     with open(out, "w", encoding="utf-8") as fh:
-        fh.write(_svg_chart(points, title, campaign_year, width, height))
+        fh.write(svg)
     return out
 
 
@@ -275,54 +360,3 @@ _CHART_JS = """
   render();
 })();
 """
-
-
-def interactive_series_html(
-    points: Sequence[tuple[float, float]],
-    title: str = "",
-    campaign_year: float | None = None,
-    width: int = 720,
-    height: int = 360,
-    windows: Sequence[tuple[float, float, str]] | None = None,
-) -> str:
-    """The series chart as an INTERACTIVE embeddable HTML fragment —
-    the reference dashboard's plotly hover/zoom/pan surface
-    (reference streamlit_app.py:254-308) without any charting library:
-    the server-rendered static SVG (identical to ``_svg_chart``, so
-    non-JS consumers and the pytest pins see the same marks) is
-    wrapped in an <svg data-chart=...> whose embedded JSON a ~150-line
-    vanilla-JS renderer re-draws on interaction.
-
-    Interactions (plotly parity for the reference's usage): nearest-
-    point hover tooltip with crosshair, wheel zoom anchored at the
-    cursor (clamped to the data range), drag pan, double-click reset.
-    Driver-side presentation edge only — called on an already-
-    collected series, never inside a distributed plan.
-    """
-    import json as _json
-
-    if not points:
-        raise ValueError("cannot chart an empty series")
-    pts = sorted((float(x), float(y)) for x, y in points)
-    static = _svg_chart(pts, title, campaign_year, width, height, windows)
-    # strip the outer <svg> wrapper; the interactive element re-wraps it
-    inner = static[static.index(">") + 1 : static.rindex("</svg>")]
-    cfg = {
-        "points": [[x, y] for x, y in pts],
-        "title": html.escape(title),
-        "campaign": campaign_year,
-        "w": width,
-        "h": height,
-        "x0": pts[0][0],
-        "x1": pts[-1][0],
-        "y0": min(y for _x, y in pts),
-        "y1": max(y for _x, y in pts),
-        "windows": [[float(a), float(b), c] for a, b, c in (windows or [])],
-    }
-    return (
-        f'<svg xmlns="http://www.w3.org/2000/svg" width="{width}" '
-        f'height="{height}" viewBox="0 0 {width} {height}" '
-        f"data-chart='{html.escape(_json.dumps(cfg), quote=True)}' "
-        f'style="cursor:crosshair">{inner}</svg>\n'
-        f"<script>{_CHART_JS}</script>"
-    )

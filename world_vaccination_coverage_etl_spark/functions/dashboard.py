@@ -20,6 +20,15 @@ request.  `st.cache_data`'s analogue there is the app's series snapshot
 from a driver-side copy of the clean table taken when the app is
 constructed, and falls back to `coverage_series` and
 `cached_dimension_index` only for a table too large to hold.
+
+A page is two parts.  `SeriesView` holds what depends only on the
+series: the rows, the line chart's `SeriesChart`, the data table, the
+latest-coverage and observation-count cards and the escaped names.
+`render_dashboard_html` adds what depends on the campaign window: the
+window KPIs, the chart's shaded windows and campaign marker, the CI
+bars, the verdict and the policy brief.  It builds the view itself
+when the caller passes none (the CLI export, the Spark serving path);
+serve.py keeps one view per pair on its snapshot path.
 """
 
 from __future__ import annotations
@@ -28,7 +37,7 @@ import datetime as dt
 import html
 from collections.abc import Sequence
 
-from .chart import interactive_series_html
+from .chart import SeriesChart
 from .narrative import policy_brief
 
 _BEFORE_COLOR = "#2c6fbb"
@@ -123,6 +132,38 @@ def _ci_bar_svg(stats, width: int = 420, height: int = 240) -> str:
     return "\n".join(parts)
 
 
+class SeriesView:
+    """The parts of one (country, antigen) page that no campaign window
+    changes, built once: the rows, the line chart's `SeriesChart`, the
+    data table, the latest-coverage and observation-count KPI cards and
+    the escaped names.  `render_dashboard_html` adds a window's
+    statistics, shaded windows, campaign marker and CI bars."""
+
+    def __init__(
+        self, country: str, antigen: str, series_rows: Sequence[tuple[int, float]]
+    ):
+        if not series_rows:
+            raise ValueError(
+                "cannot render a dashboard for an empty series "
+                "(callers guard with the nonempty check first)"
+            )
+        self.rows = series_rows
+        self.chart = SeriesChart(
+            series_rows, f"{country} — {antigen}", width=720, height=360
+        )
+        self.country_html = html.escape(country)
+        self.antigen_html = html.escape(antigen)
+        latest_year, latest_cov = max(series_rows, key=lambda r: r[0])
+        self.latest_kpi = _kpi(
+            f"latest coverage ({int(latest_year)})", _fmt(latest_cov, "%")
+        )
+        self.count_kpi = _kpi("observations", str(len(series_rows)))
+        self.rows_html = "\n".join(
+            f"<tr><td>{int(y)}</td><td>{_fmt(c)}</td></tr>"
+            for y, c in sorted(series_rows)
+        )
+
+
 def render_dashboard_html(
     country: str,
     antigen: str,
@@ -131,25 +172,20 @@ def render_dashboard_html(
     start_year: int,
     pre_years: int,
     post_years: int,
+    view: SeriesView | None = None,
 ) -> str:
     """Render the one-series dashboard view as a self-contained HTML
     string.  ``stats`` is one `series_window_stats` (or collected
-    `window_compare`) row."""
-    if not series_rows:
-        raise ValueError(
-            "cannot render a dashboard for an empty series "
-            "(callers guard with the nonempty check first)"
-        )
+    `window_compare`) row.  ``view`` is the series' `SeriesView`, built
+    here when none is given."""
+    if view is None:
+        view = SeriesView(country, antigen, series_rows)
     risk, implication, action = policy_brief(
         stats.avg_before, stats.avg_after, stats.diff_pp, stats.p_value,
         stats.n_before, stats.n_after,
     )
-    line_svg = interactive_series_html(
-        [(float(y), float(c)) for y, c in series_rows],
-        f"{country} — {antigen}",
+    line_svg = view.chart.interactive_html(
         campaign_year=float(start_year),
-        width=720,
-        height=360,
         windows=[
             (start_year - pre_years, start_year - 0.5, _BEFORE_COLOR),
             (start_year - 0.5, start_year + post_years, _AFTER_COLOR),
@@ -157,24 +193,19 @@ def render_dashboard_html(
     )
     sig = getattr(stats, "significance", None) or "n/a"
     sig_cls = "sig-yes" if str(sig).startswith("significant") else "sig-no"
-    latest_year, latest_cov = max(series_rows, key=lambda r: r[0])
-    rows_html = "\n".join(
-        f"<tr><td>{int(y)}</td><td>{_fmt(c)}</td></tr>"
-        for y, c in sorted(series_rows)
-    )
     return f"""<!DOCTYPE html>
 <html><head><meta charset="utf-8">
-<title>{html.escape(country)} / {html.escape(antigen)} — coverage dashboard</title>
+<title>{view.country_html} / {view.antigen_html} — coverage dashboard</title>
 <style>{_CSS}</style></head>
 <body>
-<h1>Vaccination coverage — {html.escape(country)} / {html.escape(antigen)}</h1>
+<h1>Vaccination coverage — {view.country_html} / {view.antigen_html}</h1>
 <div class="kpis">
-{_kpi(f"latest coverage ({int(latest_year)})", _fmt(latest_cov, "%"))}
+{view.latest_kpi}
 {_kpi("avg before", _fmt(stats.avg_before, "%"))}
 {_kpi("avg after", _fmt(stats.avg_after, "%"))}
 {_kpi("difference", _fmt(stats.diff_pp, " pp"))}
 {_kpi("p-value", _fmt(stats.p_value, "", 4))}
-{_kpi("observations", str(len(series_rows)))}
+{view.count_kpi}
 </div>
 <h2>Coverage series ({start_year - pre_years}–{start_year - 1} vs
 {start_year}–{start_year + post_years})</h2>
@@ -190,7 +221,7 @@ def render_dashboard_html(
 </div>
 <h2>Data</h2>
 <table><tr><th>year</th><th>coverage %</th></tr>
-{rows_html}
+{view.rows_html}
 </table>
 <footer>generated {dt.date.today().isoformat()} — one (country, antigen) series
 of the clean warehouse table; window statistics computed from that series</footer>

@@ -56,4 +56,4 @@ def country_to_flag(name: str | None) -> str:
         return WHITE_FLAG
 
 
-country_flag_udf = F.udf(country_to_flag, T.StringType())
+country_flag_udf = F.udf(country_to_flag, T.StringType(), useArrow=False)

@@ -126,6 +126,9 @@ class SeriesSnapshot:
         self._series = series
         self.pairs = tuple(series)
 
+    def __contains__(self, pair: tuple[str, str]) -> bool:
+        return pair in self._series
+
     def rows(self, country: str, antigen: str) -> list[tuple[int, float | None]]:
         """The pair's series as ``coverage_series`` collects it; empty
         when the pair is absent."""

@@ -28,7 +28,14 @@ picker page from it once.  Requests then read the snapshot:
 
 On the snapshot path a request takes no lock and runs no Spark job,
 and the server handles it in its own serving thread once the request
-has arrived (``make_server``).
+has arrived (``make_server``).  The picker page is encoded to bytes
+once.  A pair's first dashboard request builds its functions/dashboard.py
+``SeriesView``: the rows, the chart's axes, line and markers, the data
+table and the latest-coverage card, none of which depend on the
+window.  The app keeps up to ``SERIES_VIEWS_MAX`` views (least recently
+used first out; about 12 KB a view), so a later request for the pair
+computes and renders only its window: the statistics, the shaded
+windows, the campaign marker, the CI bars and the policy brief.
 An app serves the table as it was when the app was constructed, so it
 is isolated from a refresh that overwrites the warehouse in place; a
 refreshed warehouse needs a new ``DashboardApp``.
@@ -37,7 +44,8 @@ A table above ``SNAPSHOT_MAX_ROWS`` rows is served from Spark instead:
 ``GET /`` reads ``cached_dimension_index`` and each dashboard request
 collects the parameterized ``coverage_series`` plan (one Spark job).
 The app lock serializes those Spark actions; the window statistics and
-the render run outside it.
+the render run outside it.  That path reads the live warehouse, so it
+builds a pair's view on every request and keeps none.
 
 Usage::
 
@@ -47,6 +55,7 @@ Usage::
 
 from __future__ import annotations
 
+import functools
 import html
 import select
 import threading
@@ -55,7 +64,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .functions.dashboard import render_dashboard_html
+from .functions.dashboard import SeriesView, render_dashboard_html
 from .functions.stats import series_window_stats
 from .plans.analytics import (
     cached_dimension_index,
@@ -95,11 +104,19 @@ WINDOW_PARAMS = {
 }
 
 
+# How many (country, antigen) series views a snapshot app keeps: every
+# pair of an OWID-sized table (3,750 pairs of ~38 rows take 46.5 MB
+# under tracemalloc, about 12 KB a view: ~50 MB at the bound).
+SERIES_VIEWS_MAX = 4096
+
+
 class DashboardApp:
     """Request → series lookup → in-process window statistics → HTML
     render, over a snapshot of ``clean`` taken at construction (or, for
     a table above ``SNAPSHOT_MAX_ROWS`` rows, one Spark query per
-    request under the app lock)."""
+    request under the app lock).  On the snapshot path each pair's
+    ``SeriesView`` is built on its first request and kept, up to
+    ``SERIES_VIEWS_MAX`` least recently used."""
 
     def __init__(self, spark: SparkSession, clean: DataFrame):
         self.spark = spark
@@ -107,17 +124,24 @@ class DashboardApp:
         self._lock = threading.Lock()
         self._snapshot = series_snapshot(clean)
         if self._snapshot is not None:
-            self._index_html = _picker_html(self._snapshot.pairs)
+            self._index_page = _picker_html(self._snapshot.pairs).encode("utf-8")
+            self._series_view = functools.lru_cache(maxsize=SERIES_VIEWS_MAX)(
+                self._snapshot_view
+            )
 
-    def index_page(self) -> str:
+    def index_page(self) -> bytes:
+        """The picker page, UTF-8 encoded."""
         if self._snapshot is not None:
-            return self._index_html
+            return self._index_page
         with self._lock:
             pairs = [
                 (r["country"], r["antigen"])
                 for r in cached_dimension_index(self.clean).collect()
             ]
-        return _picker_html(pairs)
+        return _picker_html(pairs).encode("utf-8")
+
+    def _snapshot_view(self, country: str, antigen: str) -> SeriesView:
+        return SeriesView(country, antigen, self._snapshot.rows(country, antigen))
 
     def dashboard_page(self, params: dict[str, list[str]]) -> tuple[int, str]:
         country = params.get("country", [""])[0]
@@ -134,23 +158,26 @@ class DashboardApp:
                 return 400, f"<h1>400</h1><p>{name} must be an integer in [{lo}, {hi}]</p>"
             window.append(value)
         start_year, pre_years, post_years = window
-        if self._snapshot is not None:
-            series_rows = self._snapshot.rows(country, antigen)
-        else:
+        if self._snapshot is None:
             with self._lock:
                 series_rows = [
                     (r["year"], r["coverage_pct"])
                     for r in coverage_series(self.clean, country, antigen).collect()
                 ]
-        if not series_rows:
+            view = SeriesView(country, antigen, series_rows) if series_rows else None
+        elif (country, antigen) in self._snapshot:  # an unknown pair takes no slot
+            view = self._series_view(country, antigen)
+        else:
+            view = None
+        if view is None:
             return (
                 404,
                 f"<h1>404</h1><p>no data for {html.escape(country)} / "
                 f"{html.escape(antigen)}</p>",
             )
-        stats = series_window_stats(series_rows, start_year, pre_years, post_years)
+        stats = series_window_stats(view.rows, start_year, pre_years, post_years)
         return 200, render_dashboard_html(
-            country, antigen, series_rows, stats, start_year, pre_years, post_years
+            country, antigen, view.rows, stats, start_year, pre_years, post_years, view
         )
 
 
@@ -177,14 +204,14 @@ def make_server(app: DashboardApp, port: int = 0) -> ThreadingHTTPServer:
         def do_GET(self):  # noqa: N802  (BaseHTTPRequestHandler API)
             parsed = urllib.parse.urlparse(self.path)
             if parsed.path == "/":
-                status, body = 200, app.index_page()
+                status, data = 200, app.index_page()
             elif parsed.path == "/dashboard":
                 status, body = app.dashboard_page(
                     urllib.parse.parse_qs(parsed.query)
                 )
+                data = body.encode("utf-8")
             else:
-                status, body = 404, "<h1>404</h1>"
-            data = body.encode("utf-8")
+                status, data = 404, b"<h1>404</h1>"
             self.send_response(status)
             self.send_header("Content-Type", "text/html; charset=utf-8")
             self.send_header("Content-Length", str(len(data)))
