@@ -531,11 +531,12 @@ def test_jaccard_boundary_pair_not_dropped(spark):
         assert got == {(1, 2)}, (r, got)
 
 
-def test_minhash_screen_new_batch_vs_base_index(spark):
+def test_minhash_screen_new_batch_vs_base_index(spark, tmp_path):
     """Incremental ingest screen: batch docs near-duplicating a BASE
     doc are caught via the materialized band index; a batch doc that
     only near-duplicates ANOTHER BATCH doc is not (the screen is
-    batch-vs-base by design); empty docs pass through as keeps."""
+    batch-vs-base by design); empty docs pass through as keeps.  The
+    durable staging path (``staging_dir``) returns the same rows."""
     from world_vaccination_coverage_etl_spark.operators.dedup import (
         minhash_band_signatures,
         minhash_screen_new_batch,
@@ -568,6 +569,10 @@ def test_minhash_screen_new_batch_vs_base_index(spark):
     assert got == {(10, 0)}
     for r in rows:
         assert 0.7 <= r.jaccard <= 1.0
+    staged = minhash_screen_new_batch(
+        index, base, new, threshold=0.7, staging_dir=str(tmp_path)
+    )
+    assert sorted(staged.collect()) == sorted(rows)
 
 
 def test_minhash_screen_empty_batch(spark):
@@ -586,11 +591,12 @@ def test_minhash_screen_empty_batch(spark):
     assert out.count() == 0
 
 
-def test_embedding_screen_new_batch_vs_base_index(spark):
+def test_embedding_screen_new_batch_vs_base_index(spark, tmp_path):
     """Vector-space incremental screen: an exact re-crawl collides in
     every LSH table and is caught with cosine 1.0; an orthogonal/novel
     vector passes; a batch vector near-duplicating only ANOTHER batch
-    vector is not dropped (batch-vs-base contract)."""
+    vector is not dropped (batch-vs-base contract).  The durable
+    staging path (``staging_dir``) returns the same rows."""
     from world_vaccination_coverage_etl_spark.operators.dedup import (
         embedding_screen_new_batch,
         signlsh_bucket_assignments,
@@ -621,6 +627,10 @@ def test_embedding_screen_new_batch_vs_base_index(spark):
     rows = pairs.collect()
     assert {(r.new_id, r.base_id) for r in rows} == {(10, 0)}
     assert all(r.cosine >= 0.95 for r in rows)
+    staged = embedding_screen_new_batch(
+        idx, base, new, threshold=0.95, dim=dim, staging_dir=str(tmp_path)
+    )
+    assert sorted(staged.collect()) == sorted(rows)
 
 
 def test_fused_minhash_kernel_parity(spark):

@@ -72,6 +72,18 @@ def test_partition_invariance(spark):
         assert a[k] == pytest.approx(b[k], abs=1e-12)
 
 
+def test_staged_path_matches_checkpoint_path(spark, tmp_path):
+    """The durable parquet staging (``staging_dir``) ranks every node as
+    the default localCheckpoint path does."""
+    edges = [(i, (i * 7) % 23 + 1) for i in range(1, 23) if i != (i * 7) % 23 + 1]
+    nodes = list(range(1, 24))
+    base = _ranks(spark, nodes, edges)
+    staged = _ranks(spark, nodes, edges, staging_dir=str(tmp_path / "pr"))
+    assert staged.keys() == base.keys()
+    for k in base:
+        assert staged[k] == pytest.approx(base[k], abs=1e-12)
+
+
 def test_more_central_node_ranks_higher(spark):
     # star: hub 1 linked to 2..6; hub must outrank every leaf
     edges = [(1, i) for i in range(2, 7)]

@@ -108,7 +108,7 @@ def connected_components(
         .filter(F.col("u") != F.col("v"))  # self-loops carry nothing
         .dropDuplicates(["u", "v"])
     )
-    e = stage(e, staging_dir, "cc_edges_0")
+    e = stage(e, "cc_edges_0", eager=True, staging_dir=staging_dir)
 
     # settled-component parking (late-r9, the second half of the r8
     # verdict's CC item): after each star round, a component whose
@@ -129,7 +129,8 @@ def connected_components(
         # stage the star round ONCE; the settled/unsettled split below
         # consumes it from three plans (bad_root, anti, semi)
         e = stage(
-            _small_star(_large_star(e)), staging_dir, f"cc_star_{(it % 2) + 1}"
+            _small_star(_large_star(e)),
+            f"cc_star_{(it % 2) + 1}", eager=True, staging_dir=staging_dir
         )
         # one node-stat pass finds every UNSETTLED node: appears as
         # both parent and child (a chain) or as a child twice (an
@@ -162,7 +163,9 @@ def connected_components(
         )
         # root-id list is tiny; cut it so the anti/semi split doesn't
         # recompute the three semi-joins twice
-        bad_root = stage(bad_root, staging_dir, f"cc_bad_{it % 2}")
+        bad_root = stage(
+            bad_root, f"cc_bad_{it % 2}", eager=True, staging_dir=staging_dir
+        )
         # convergence probe on bad_root, not on the residual edge set:
         # bad_root empty ⟺ residual (e ⋉ bad_root) empty, and probing
         # here skips the final round's anti-join/semi-join passes over
@@ -175,14 +178,12 @@ def connected_components(
             break
         newly_settled = stage(
             e.join(bad_root, on="u", how="left_anti"),
-            staging_dir,
-            f"cc_parked_{it}",
+            f"cc_parked_{it}", eager=True, staging_dir=staging_dir
         )
         parked.append(newly_settled)
         e = stage(
             e.join(bad_root, on="u", how="left_semi"),
-            staging_dir,
-            f"cc_edges_{(it % 2) + 1}",
+            f"cc_edges_{(it % 2) + 1}", eager=True, staging_dir=staging_dir
         )
     else:
         raise RuntimeError(
@@ -277,7 +278,7 @@ def oriented_triangles(
     the degree order, so results are comparable with an id-oriented
     enumeration (the deterministic form small-graph oracles use).
     """
-    o = orient_edges(edges, src_col, dst_col).localCheckpoint(eager=False)
+    o = stage(orient_edges(edges, src_col, dst_col), "oriented_edges", eager=False)
     w1 = o.select(F.col("x").alias("wx"), F.col("y").alias("wy"),
                   F.col("ydeg").alias("wydeg"))
     w2 = o.select(F.col("x").alias("wx2"), F.col("y").alias("wz"),

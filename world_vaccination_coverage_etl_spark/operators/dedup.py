@@ -293,8 +293,7 @@ def minhash_near_dup_pairs(
             F.col(id_col),
             _minhash_bands_and_shingles(F.col(text_col)).alias("bs"),
         ).select(id_col, "bs.bands", "bs.shingles"),
-        staging_dir,
-        "minhash_bands_shingles",
+        "minhash_bands_shingles", eager=True, staging_dir=staging_dir
     )
     banded = both.select(
         F.col(id_col),
@@ -398,8 +397,7 @@ def minhash_screen_new_batch(
             F.col(id_col),
             _minhash_bands_and_shingles(F.col(text_col)).alias("bs"),
         ).select(id_col, "bs.bands", "bs.shingles"),
-        staging_dir,
-        "incr_new_bands_shingles",
+        "incr_new_bands_shingles", eager=True, staging_dir=staging_dir
     )
     new_bands = both.select(
         F.col(id_col),
@@ -1259,7 +1257,9 @@ def simhash_md5_near_dup_pairs(
     signed = simhash_md5_signatures_kernel(df, text_col, id_col)
     # one narrow materialization so the signature kernel runs once, not
     # once per blocking-join side
-    signed = stage(signed, staging_dir, "simhash_md5_signed")
+    signed = stage(
+        signed, "simhash_md5_signed", eager=True, staging_dir=staging_dir
+    )
     g = signed.groupBy("sig_hi", "sig_lo").agg(F.min(id_col).alias("gid"))
     members = signed.join(g, on=["sig_hi", "sig_lo"]).select(id_col, "gid")
 
@@ -1693,8 +1693,7 @@ def embedding_screen_new_batch(
             dim=dim, lsh_bits=lsh_bits, lsh_tables=lsh_tables,
             lsh_seed=lsh_seed,
         ),
-        staging_dir,
-        "incr_new_vec_buckets",
+        "incr_new_vec_buckets", eager=True, staging_dir=staging_dir
     )
     touched = new_bkts.select("tbl", "bkt").distinct()
     idx_pruned = index_df.join(touched, ["tbl", "bkt"], "left_semi")

@@ -73,8 +73,7 @@ def pagerank(
         fwd.join(outdeg, on="src", how="inner").select(
             "src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w")
         ),
-        staging_dir,
-        "pr_edges",
+        "pr_edges", eager=True, staging_dir=staging_dir
     )
 
     n = nodes.count()  # single scalar to the driver, before the loop
@@ -85,7 +84,8 @@ def pagerank(
     base = (1.0 - damping) / n
 
     node_ids = stage(
-        nodes.select(F.col(id_col).alias("node")), staging_dir, "pr_nodes"
+        nodes.select(F.col(id_col).alias("node")),
+        "pr_nodes", eager=True, staging_dir=staging_dir
     )
     ranks = node_ids.select("node", F.lit(1.0 / n).alias("rank"))
 
@@ -103,6 +103,8 @@ def pagerank(
             ).alias("rank"),
         )
         # alternating staged paths so a write never clobbers its input
-        ranks = stage(ranks, staging_dir, f"pr_ranks_{it % 2}")
+        ranks = stage(
+            ranks, f"pr_ranks_{it % 2}", eager=True, staging_dir=staging_dir
+        )
 
     return ranks.select(F.col("node").alias(id_col), F.col("rank"))

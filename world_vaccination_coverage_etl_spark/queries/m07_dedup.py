@@ -617,13 +617,13 @@ def curation_pipeline_stages(spark, sf_dir):
     )
     # stage materialization: the near-dup self-join + the survivor
     # anti-join would otherwise re-execute the whole gate+dedup chain
-    # 3x (once per join input) and the shingle UDF twice.  Checkpointing
-    # the surviving (doc_id, grams) slice to parquet runs both once —
-    # the production pattern at 100 TB too: each curation stage
-    # persists, downstream stages scan the materialized table.
-    tmp = scratch_dir("curation_uniq_")
-    uniq.write.mode("overwrite").parquet(tmp)
-    uniq = spark.read.parquet(tmp)
+    # 3x (once per join input) and the shingle UDF twice.  Staging the
+    # surviving (doc_id, grams) slice to parquet runs both once — the
+    # production pattern at 100 TB too: each curation stage persists,
+    # downstream stages scan the materialized table.
+    uniq = stage(
+        uniq, "uniq", eager=True, staging_dir=scratch_dir("curation_uniq_")
+    )
     yield "exact_dedup_shingle", uniq, True
     pairs = ngram_jaccard_pairs_from_grams(uniq, block_col=None, threshold=0.7)
     yield "near_dup_pairs", pairs, False

@@ -1228,11 +1228,8 @@ def q_vocab_pareto_coverage(spark, sf_dir):
             )
         ).alias("w")
     )
-    freq = (
-        toks.groupBy("w")
-        .agg(F.count(F.lit(1)).cast("double").alias("f"))
-        .localCheckpoint(eager=False)
-    )
+    freq = toks.groupBy("w").agg(F.count(F.lit(1)).cast("double").alias("f"))
+    freq = stage(freq, "word_freq", eager=False)
     spec = RankSpec(
         "f",
         "w",
@@ -1325,11 +1322,8 @@ def q_zipf_slope_words(spark, sf_dir):
     )
     # vocab-sized reduction; lineage-cut so the bucket-count pass and
     # the final pass tokenize the corpus ONCE, not once per action
-    freq = (
-        toks.groupBy("w")
-        .agg(F.count(F.lit(1)).cast("double").alias("f"))
-        .localCheckpoint(eager=False)
-    )
+    freq = toks.groupBy("w").agg(F.count(F.lit(1)).cast("double").alias("f"))
+    freq = stage(freq, "word_freq", eager=False)
     spec = RankSpec(
         "f",
         "w",
@@ -1408,11 +1402,11 @@ def q_gains_table_embedding(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
     # narrow scored projection (~20 B/row); lineage-cut so the norm HOF
     # runs once, not once per two-phase pass
-    s = e.select(
+    s = stage(e.select(
         "vec_id",
         F.round(_norm(F.col("embedding")), 6).alias("score"),
         F.when(F.col("label") % 2 == 0, 1).otherwise(0).alias("pos"),
-    ).localCheckpoint(eager=False)
+    ), "gains_scores", eager=False)
     d = two_phase_ntile(
         s, 10, RankSpec("score", "vec_id", value_desc=True), out_col="decile"
     ).select("pos", "decile")
@@ -1866,16 +1860,12 @@ def q_rfm_user_segments(spark, sf_dir):
     )
     # user-dimension reduction; lineage-cut so the fused quantile and
     # count passes compute the purchase rollup ONCE, not once per action
-    m = (
-        p.crossJoin(F.broadcast(ref))
-        .select(
-            "user_id",
-            F.datediff("ref_day", "last_day").cast("long").alias("recency_days"),
-            "frequency",
-            "monetary",
-        )
-        .localCheckpoint(eager=False)
-    )
+    m = stage(p.crossJoin(F.broadcast(ref)).select(
+        "user_id",
+        F.datediff("ref_day", "last_day").cast("long").alias("recency_days"),
+        "frequency",
+        "monetary",
+    ), "rfm_users", eager=False)
     specs = [
         RankSpec("recency_days", "user_id", out_col="_rr"),
         RankSpec("frequency", "user_id", out_col="_rf", value_desc=True),
@@ -2011,14 +2001,10 @@ def q_auc_rank_embedding(spark, sf_dir):
         F.round(_norm(F.col("embedding")), 6).alias("score"),
         F.when(F.col("label") % 2 == 0, 1).otherwise(0).alias("pos"),
     )
-    g = (
-        s.groupBy("score")
-        .agg(
-            F.count(F.lit(1)).cast("double").alias("n_g"),
-            F.sum("pos").cast("double").alias("pos_g"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    g = stage(s.groupBy("score").agg(
+        F.count(F.lit(1)).cast("double").alias("n_g"),
+        F.sum("pos").cast("double").alias("pos_g"),
+    ), "auc_score_groups", eager=False)
     r = two_phase_cumsum(
         g,
         RankSpec("score", "score"),

@@ -676,7 +676,7 @@ def _fuzzy_blocked_pairs(spark, sf_dir):
 def q_fuzzy_match_topk_docs(spark, sf_dir):
     k = 3
     _g, members, gpairs = _fuzzy_group_graph(spark, sf_dir)
-    members = members.localCheckpoint(eager=False)
+    members = stage(members, "fuzzy_members", eager=False)
     # symmetric group adjacency; per (gid, dist) keep the k neighbor
     # groups with the smallest min-member id — gid IS that min id
     adj = gpairs.select(
@@ -1562,10 +1562,9 @@ def q_fuzzy_entity_clusters(spark, sf_dir):
 
     def build(spark, sf_dir):
         from ..operators.components import connected_components
-        from ..operators.staging import stage
 
         g, members, gpairs = _fuzzy_group_graph(spark, sf_dir)
-        gpairs = gpairs.select("gid_a", "gid_b").localCheckpoint(eager=False)
+        gpairs = stage(gpairs.select("gid_a", "gid_b"), "fuzzy_gpairs", eager=False)
         # matched groups: ≥2 members (within-group dist-0 pairs exist)
         # or any cross-group match — singleton unmatched groups carry
         # no linkage decision and stay out, mirroring the pair-graph
@@ -1577,10 +1576,8 @@ def q_fuzzy_entity_clusters(spark, sf_dir):
             .unionAll(gpairs.select(F.col("gid_b").alias("gid")))
             .distinct()
         )
-        # eager: the CC nodes and the member join both consume it, and
-        # AQE can run their stages at once, each computing a lazy
-        # checkpoint's fuzzy-match lineage (see staging.stage)
-        matched = stage(matched, None, "fuzzy_matched_gids")
+        # eager: the CC nodes and the member join both consume it
+        matched = stage(matched, "fuzzy_matched_gids", eager=True)
         m = members.join(matched, on="gid")
         # r14 (guide §1.2 — shrink what the ITERATIVE operator sees):
         # the doc→gid star edges used to ride through every CC round,
@@ -1666,16 +1663,14 @@ def q_naive_bayes_lang_confusion(spark, sf_dir):
     toks = d.select(
         "doc_id", "lang", F.explode(_toks(F.col("text"))).alias("w")
     )
-    # localCheckpoint: tf feeds THREE consumers (cc, dt, matched) and
-    # exchange reuse does NOT cover them — profiled at sf0.1, the
+    # staged: tf feeds THREE consumers (cc, dt, matched) and exchange
+    # reuse does NOT cover them — profiled at sf0.1, the
     # tokenize+partial-agg map stage ran three times (~2.5 s each,
     # single-task).  Materializing the small tf table once cuts the
-    # query ~20% and is exactly what a production pipeline would stage
-    # (r13 optimization round; deterministic content, so certification
-    # is unaffected).
-    tf = toks.groupBy("doc_id", "lang", "w").agg(
-        F.count(F.lit(1)).alias("tf")
-    ).localCheckpoint(eager=False)
+    # query ~20% (r13 optimization round; deterministic content, so
+    # certification is unaffected).
+    tf = toks.groupBy("doc_id", "lang", "w").agg(F.count(F.lit(1)).alias("tf"))
+    tf = stage(tf, "nb_tf", eager=False)
     cc = tf.groupBy(F.col("lang").alias("c"), "w").agg(
         F.sum("tf").alias("cwc")
     )

@@ -8,7 +8,7 @@ body is a transactional ``MERGE INTO`` (Delta/Iceberg/Hudi) so only
 touched partitions rewrite; plain parquet has no transaction log, so
 this module implements the same semantics as read + latest-per-key +
 atomic-swap overwrite, with the combine materialized (eager
-localCheckpoint) before the target is deleted.  The SEMANTICS —
+``stage``) before the target is deleted.  The SEMANTICS —
 incremental micro-batches, per-key last-write-wins with a total
 (ts, id) tiebreak, idempotent re-delivery — are the production
 contract; swap the body for MERGE INTO when a table format is present.
@@ -25,6 +25,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..operators.staging import stage
 
 
 def latest_per_key(
@@ -75,7 +77,7 @@ def streaming_upsert_parquet(
         # materialize BEFORE the overwrite deletes the files the plan
         # reads (plain parquet has no snapshot isolation; a table
         # format's MERGE INTO replaces this whole dance)
-        fresh = fresh.localCheckpoint(eager=True)
+        fresh = stage(fresh, "upsert_fresh", eager=True)
         fresh.write.mode("overwrite").parquet(out_dir)
 
     return (
